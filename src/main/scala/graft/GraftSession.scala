@@ -22,16 +22,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Scale-dependent AQE knobs, env-overridable (SPARK_GRAFT_AQE_*)
-    * so a cluster deployment — or a local bisect — can flip them
-    * without a rebuild. Defaults are the measured local/bench choice;
-    * see OPTIMIZATION_r19.md for the per-flag evidence.
-    */
-  private def envOr(name: String, default: String): String =
-    sys.env.getOrElse(name, default)
-
-  def configure(b: SparkSession.Builder): SparkSession.Builder = {
-    val base = b
+  def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
@@ -47,23 +38,10 @@ object GraftSession {
     // affected 22-query set, idle host, both core counts). The
     // cache-heavy index/pipeline queries that DO win from bytes-based
     // sizing opt in per query via ScaleOps.byteSizedAqe (restored by
-    // the harness's per-query releaseAll). Session defaults stay
-    // Spark's (parallelismFirst=true, cached-plan AQE off),
-    // env-overridable for cluster deployments where the advisory
-    // size, not local core count, should size every exchange.
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      envOr("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      envOr("SPARK_GRAFT_AQE_CACHED_PLAN", "false"))
+    // the harness's per-query releaseAll); the session keeps Spark's
+    // defaults.
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.ui.enabled", "false")
-    // optional floor on AQE's coalesced width (unset = Spark default):
-    // byte-based sizing ignores CPU density, and a byte-SMALL frame
-    // feeding pair-mining / explode compute serializes without a floor
-    sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITIONS").filter(_.nonEmpty)
-      .fold(base)(v => base.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum", v))
-  }
 
   /** Local session for tests/tools. `cpus` threads, shuffle partitions
     * sized to match (not the 200 default, which just fragments local

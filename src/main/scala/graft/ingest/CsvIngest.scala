@@ -55,6 +55,10 @@ object CsvIngest {
       .option("multiLine", multiLine.toString)
       // no inferSchema: all columns stay StringType, like the reference
       .csv(path)
+      // a blank field is '' as in the reference's matrix and
+      // fromString, not NULL (a NULL string binds as CLOB over JDBC,
+      // which a VARCHAR column rejects)
+      .na.fill("")
   }
 
   def fromString(spark: SparkSession, payload: String,

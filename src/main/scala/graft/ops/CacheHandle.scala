@@ -66,16 +66,22 @@ object CacheHandle {
   * a session-lifetime leak.
   */
 object QueryCaches {
-  private val handles =
-    scala.collection.mutable.ArrayBuffer.empty[CacheHandle]
+  // ledger handles' and checkpoint RDDs' releases, run by releaseAll
+  private val releases =
+    scala.collection.mutable.ArrayBuffer.empty[() => Unit]
   // (session, key, value-before-the-query-set-it) — restored LIFO by
   // releaseAll, same lifecycle as the cache ledger
   private val confRestores = scala.collection.mutable.ArrayBuffer
     .empty[(org.apache.spark.sql.SparkSession, String, Option[String])]
 
-  private def fresh(): CacheHandle = synchronized {
+  /** Register a release for the next [[releaseAll]]. */
+  private[graft] def onRelease(release: => Unit): Unit = synchronized {
+    releases += (() => release)
+  }
+
+  private def fresh(): CacheHandle = {
     val h = new CacheHandle
-    handles += h
+    onRelease(h.release())
     h
   }
 
@@ -84,13 +90,6 @@ object QueryCaches {
 
   /** Persist `df` under the ledger (chainable via `.transform`). */
   def persist(df: DataFrame): DataFrame = fresh().persist(df)
-
-  // checkpoint RDDs whose blocks releaseAll must drop: a
-  // localCheckpoint's blocks are otherwise released only when the
-  // RDD is GC'd via ContextCleaner — nondeterministic across a
-  // 357-query Verify/Bench JVM
-  private val checkpointRdds =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
   /** `df.localCheckpoint(eager)` with DETERMINISTIC cleanup: the
     * checkpoint's backing RDD is unpersisted by [[releaseAll]] like
@@ -101,8 +100,11 @@ object QueryCaches {
     */
   def localCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val out = df.localCheckpoint(eager)
+    // the checkpoint's blocks are otherwise released only when the RDD
+    // is GC'd via ContextCleaner — nondeterministic across a 357-query
+    // Verify/Bench JVM
     org.apache.spark.sql.graftshim.Bridge.checkpointRdd(out).foreach { r =>
-      synchronized { checkpointRdds += r }
+      onRelease(r.unpersist(blocking = false))
     }
     out
   }
@@ -131,16 +133,17 @@ object QueryCaches {
 
   /** Unpersist every ledger-tracked cache and restore every
     * query-scoped conf. Call after the current query's result has
-    * been materialized.
+    * been materialized. A release that throws still leaves the confs
+    * restored and the ledger empty; the exception propagates.
     */
   def releaseAll(): Unit = synchronized {
-    handles.foreach(_.release())
-    handles.clear()
-    checkpointRdds.foreach(_.unpersist(blocking = false))
-    checkpointRdds.clear()
-    confRestores.reverseIterator.foreach { case (s, k, old) =>
-      old.fold(s.conf.unset(k))(v => s.conf.set(k, v))
+    try releases.foreach(_())
+    finally {
+      releases.clear()
+      confRestores.reverseIterator.foreach { case (s, k, old) =>
+        old.fold(s.conf.unset(k))(v => s.conf.set(k, v))
+      }
+      confRestores.clear()
     }
-    confRestores.clear()
   }
 }

@@ -121,6 +121,18 @@ object XlsxDataSource {
       } else Seq(p)
     }
 
+  /** The sheet a read addresses: the named one, else the workbook's
+    * first. Only that sheet is parsed; a workbook without it fails,
+    * naming the file.
+    */
+  private[sources] def selectSheet(path: String, sheet: Option[String],
+      opts: XlsxIngest.Options): Vector[Vector[String]] = {
+    val matrices = XlsxIngest.parseMatrices(path, opts, only = sheet)
+    sheet.fold(matrices.headOption)(name => matrices.find(_._1 == name))
+      .map(_._2).getOrElse(throw new IllegalArgumentException(
+        s"workbook $path has no " + sheet.fold("sheets")(n => s"sheet '$n'")))
+  }
+
   def optionPaths(
       options: CaseInsensitiveStringMap): Seq[String] = {
     val raw = Option(options.get("paths")) match {
@@ -143,16 +155,8 @@ class XlsxDataSource extends TableProvider {
     XlsxDataSource.optionPaths(options).head
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val sheet = Option(options.get("sheet"))
-    val opts = xlsxOptions(options)
-    val matrices = XlsxIngest.parseMatrices(firstPath(options), opts,
-      only = sheet)
-    val matrix = sheet match {
-      case Some(name) => matrices.find(_._1 == name).map(_._2)
-        .getOrElse(throw new IllegalArgumentException(s"no sheet '$name'"))
-      case None => matrices.headOption.map(_._2)
-        .getOrElse(throw new IllegalArgumentException("workbook has no sheets"))
-    }
+    val matrix = XlsxDataSource.selectSheet(firstPath(options),
+      Option(options.get("sheet")), xlsxOptions(options))
     val header = matrix.headOption.getOrElse(Vector.empty)
     StructType(SheetMatrix.headerNames(header)
       .map(n => StructField(n, StringType)))
@@ -206,22 +210,13 @@ final class XlsxReaderFactory(schema: StructType)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[XlsxPartition]
     new PartitionReader[InternalRow] {
-      private val matrices = XlsxIngest.parseMatrices(
-        part.path, XlsxIngest.Options(part.leapBugCompat),
-        only = part.sheet)
       // fail-fast like inferSchema: a workbook MISSING the requested
       // sheet silently contributed zero rows to a multi-file load —
       // partial data with a green job, the opposite of the
       // inference-time error for the identical malformation. (A sheet
       // that EXISTS but is empty still reads as zero rows — legit.)
-      private val matrix = part.sheet match {
-        case Some(name) => matrices.find(_._1 == name).map(_._2)
-          .getOrElse(throw new IllegalArgumentException(
-            s"workbook ${part.path} has no sheet '$name'"))
-        case None => matrices.headOption.map(_._2)
-          .getOrElse(throw new IllegalArgumentException(
-            s"workbook ${part.path} has no sheets"))
-      }
+      private val matrix = XlsxDataSource.selectSheet(part.path,
+        part.sheet, XlsxIngest.Options(part.leapBugCompat))
       private val width = schema.length
       private val rows = matrix.drop(1).iterator // row 0 = header
       private var current: Vector[String] = _

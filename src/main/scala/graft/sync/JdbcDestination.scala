@@ -87,10 +87,8 @@ object JdbcDestination {
   /** Execute a plan through Spark's JDBC writer. */
   def write(df: DataFrame, url: String, p: Plan,
       props: Map[String, String] = Map.empty): LoadReport = {
-    val cached = df.persist() // count + save: one source scan, not two
-    try {
-      val n = cached.count()
-      val w = cached.write.format("jdbc")
+    val n = LoadReport.countedWrite(df) { d =>
+      val w = d.write.format("jdbc")
         .mode(SaveMode.Overwrite)
         .option("url", url)
         .option("dbtable", p.table)
@@ -99,7 +97,7 @@ object JdbcDestination {
         .option("batchsize", p.batchSize.toString)
       props.foreach { case (k, v) => w.option(k, v) }
       w.save()
-      LoadReport(Some(p.action), p.table, n)
-    } finally cached.unpersist()
+    }
+    LoadReport(Some(p.action), p.table, n)
   }
 }

@@ -1,5 +1,8 @@
 package graft.sync
 
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Human-readable load report, matching the reference's strings
   * (`app/data.py:134`, `:153`, `:202`, `:255`) with its bugs fixed:
   *
@@ -18,5 +21,18 @@ final case class LoadReport(
       s"${a.pastTense} and loaded into $target.\n$nRecords records loaded successfully.\n"
     case None =>
       s"Created $target.\n$nRecords records loaded successfully.\n"
+  }
+}
+
+object LoadReport {
+
+  /** Run `save` over `df` and return the number of rows it wrote: an
+    * observed metric of the write's own pass, so every sink loads and
+    * counts in one Spark job, with no cache and no second scan.
+    */
+  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
+    val o = Observation()
+    save(df.observe(o, count(lit(1)).as("n")))
+    o.get("n").asInstanceOf[Long]
   }
 }

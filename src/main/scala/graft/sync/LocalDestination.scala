@@ -31,33 +31,37 @@ object LocalDestination {
     Files.createDirectories(dir)
     val target = dir.resolve(s"$tableName.csv")
     val tmp = Files.createTempDirectory(dir, s".$tableName-load")
-    // persist: the count and the write must not scan the source twice
-    val cached = df.persist()
-    try {
-      val n = cached.count()
-      cached.coalesce(1).write.mode("overwrite")
-        .option("header", "true")
-        // Python csv.writer emits empty cells bare, not quoted ""
-        .option("emptyValue", "").csv(tmp.toString)
-      val part = withList(tmp)(_.find(_.getFileName.toString.startsWith("part-")))
-        .getOrElse(throw new IllegalStateException("no part file written"))
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      withList(tmp)(_.foreach(Files.deleteIfExists(_)))
-      Files.deleteIfExists(tmp)
-      LoadReport(None, target.toString, n)
-    } finally cached.unpersist()
+    val (parts, n) = writeCsvParts(df.coalesce(1), tmp,
+      header = true, gzip = false)
+    val part = parts.headOption
+      .getOrElse(throw new IllegalStateException("no part file written"))
+    Files.move(tmp.resolve(part), target, StandardCopyOption.REPLACE_EXISTING)
+    withList(tmp)(_.foreach(Files.deleteIfExists(_)))
+    Files.deleteIfExists(tmp)
+    LoadReport(None, target.toString, n)
   }
 
   /** Scale variant: parallel multi-part CSV directory per table. */
   def writeDir(df: DataFrame, tableName: String, path: String,
       baseDir: String, compress: Boolean = false): LoadReport = {
     val dir = resolve(baseDir, path).resolve(tableName)
-    val cached = df.persist()
-    try {
-      val w = cached.write.mode("overwrite").option("header", "true")
-      (if (compress) w.option("compression", "gzip") else w).csv(dir.toString)
-      LoadReport(None, dir.toString, cached.count())
-    } finally cached.unpersist()
+    val (_, n) = writeCsvParts(df, dir, header = true, gzip = compress)
+    LoadReport(None, dir.toString, n)
+  }
+
+  /** The CSV writer of every file sink: replace `dir` with the part
+    * files of `df` and return their names, sorted, and the row count.
+    * Empty cells are bare, like Python's `csv.writer`, not quoted `""`.
+    */
+  private[sync] def writeCsvParts(df: DataFrame, dir: Path, header: Boolean,
+      gzip: Boolean): (Seq[String], Long) = {
+    val n = LoadReport.countedWrite(df) { d =>
+      val w = d.write.mode("overwrite")
+        .option("header", header.toString).option("emptyValue", "")
+      (if (gzip) w.option("compression", "gzip") else w).csv(dir.toString)
+    }
+    (withList(dir)(_.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq.sorted), n)
   }
 
   /** `Files.list` holds an open DirectoryStream — always close it. */

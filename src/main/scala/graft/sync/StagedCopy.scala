@@ -1,8 +1,6 @@
 package graft.sync
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 
@@ -33,25 +31,23 @@ object StagedCopy {
       statements: Seq[String], // execute in order on the warehouse
       nRecords: Long)
 
-  /** Parallel headerless gzip-CSV stage write; returns part files. */
-  private def writeStage(df: DataFrame, dir: Path): (Seq[String], Long) = {
-    val cached = df.persist()
-    try {
-      cached.write.mode("overwrite")
-        .option("header", "false")
-        .option("emptyValue", "") // python csv.writer: bare empty cells
-        .option("compression", "gzip")
-        .csv(dir.toString)
-      val parts = {
-        val s = Files.list(dir)
-        try s.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.startsWith("part-") && n.endsWith(".csv.gz"))
-          .toSeq.sorted
-        finally s.close()
-      }
-      (parts, cached.count())
-    } finally cached.unpersist()
+  /** The preamble both warehouses share: sanitize the table name
+    * INTERNALLY like JdbcDestination.plan (idempotent — sqlify∘sqlify
+    * = sqlify): the raw name was interpolated into warehouse SQL (the
+    * reference's B6 injection surface) AND into the local stage path
+    * ("../../etc" traversal); sqlify's [a-z0-9_] output closes both.
+    * The stage dir is schema-scoped, so two tenants loading the same
+    * table name never share staged files. `statements` gets the
+    * schema, the table, the stage dir and the staged part files.
+    */
+  private def stage(df: DataFrame, tableName: String, path: String,
+      localStageDir: String)(
+      statements: (String, String, Path, Seq[String]) => Seq[String]): Staged = {
+    val table = graft.model.Identifiers.sqlify(tableName)
+    val schema = JdbcDestination.targetSchema(path)
+    val dir = Paths.get(localStageDir, schema, table)
+    val (files, n) = LocalDestination.writeCsvParts(df, dir, header = false, gzip = true)
+    Staged(dir.toString, files, statements(schema, table, dir, files), n)
   }
 
   /** Redshift: stage under `s3://bucket/prefix/` and COPY the prefix.
@@ -73,27 +69,18 @@ object StagedCopy {
       localStageDir: String,
       bucket: String,
       iamRole: String,
-      region: String = "eu-central-1"): Staged = {
-    // sanitize INTERNALLY like JdbcDestination.plan (idempotent —
-    // sqlify∘sqlify = sqlify): the raw name was interpolated into
-    // warehouse SQL (the reference's B6 injection surface) AND into
-    // the local stage path ("../../etc" traversal); sqlify's
-    // [a-z0-9_] output closes both
-    val table = graft.model.Identifiers.sqlify(tableName)
-    val schema = JdbcDestination.targetSchema(path)
-    val dir = Paths.get(localStageDir, schema, table)
-    val (files, n) = writeStage(df, dir)
-    val prefix = s"excel-to-database/$schema/$table/"
-    val copy =
-      s"""COPY $schema.$table
-         |FROM 's3://$bucket/$prefix'
-         |iam_role '$iamRole'
-         |GZIP
-         |csv
-         |COMPUPDATE OFF
-         |region '$region';""".stripMargin
-    Staged(dir.toString, files, Seq(copy), n)
-  }
+      region: String = "eu-central-1"): Staged =
+    stage(df, tableName, path, localStageDir) { (schema, table, _, _) =>
+      val prefix = s"excel-to-database/$schema/$table/"
+      Seq(
+        s"""COPY $schema.$table
+           |FROM 's3://$bucket/$prefix'
+           |iam_role '$iamRole'
+           |GZIP
+           |csv
+           |COMPUPDATE OFF
+           |region '$region';""".stripMargin)
+    }
 
   /** Snowflake: table-stage PUT per part file + one COPY INTO.
     * Statement sequence mirrors `app/data.py:243-254`: recreate the
@@ -104,29 +91,22 @@ object StagedCopy {
       df: DataFrame,
       tableName: String,
       path: String,
-      localStageDir: String): Staged = {
-    // same internal sanitization as redshift (injection + traversal)
-    val table = graft.model.Identifiers.sqlify(tableName)
-    val schema = JdbcDestination.targetSchema(path)
-    // schema-scoped like the Redshift prefix: two tenants loading the
-    // same table name never collide in one local stage dir
-    val dir = Paths.get(localStageDir, schema, table)
-    val (files, n) = writeStage(df, dir)
-    val statements = Seq(
-      s"USE SCHEMA $schema",
-      // reference-faithful quirk (data.py:244-248): the named
-      // TEMPORARY STAGE created here is never referenced — REMOVE/
-      // PUT/COPY all address the implicit TABLE stage @%table, which
-      // exists once the table does (the flow creates the table
-      // first). Kept verbatim: the oracle of record is the
-      // reference's statement sequence, dead CREATE included.
-      s"CREATE OR REPLACE TEMPORARY STAGE $table;",
-      s"REMOVE @%$table;") ++
-      files.map(f => s"PUT file://$dir/$f @%$table OVERWRITE=TRUE") :+
-      s"""COPY INTO $table file_format = (
-         |    TYPE = CSV
-         |    FIELD_OPTIONALLY_ENCLOSED_BY = '"'
-         |)""".stripMargin
-    Staged(dir.toString, files, statements, n)
-  }
+      localStageDir: String): Staged =
+    stage(df, tableName, path, localStageDir) { (schema, table, dir, files) =>
+      Seq(
+        s"USE SCHEMA $schema",
+        // reference-faithful quirk (data.py:244-248): the named
+        // TEMPORARY STAGE created here is never referenced — REMOVE/
+        // PUT/COPY all address the implicit TABLE stage @%table, which
+        // exists once the table does (the flow creates the table
+        // first). Kept verbatim: the oracle of record is the
+        // reference's statement sequence, dead CREATE included.
+        s"CREATE OR REPLACE TEMPORARY STAGE $table;",
+        s"REMOVE @%$table;") ++
+        files.map(f => s"PUT file://$dir/$f @%$table OVERWRITE=TRUE") :+
+        s"""COPY INTO $table file_format = (
+           |    TYPE = CSV
+           |    FIELD_OPTIONALLY_ENCLOSED_BY = '"'
+           |)""".stripMargin
+    }
 }

@@ -1,12 +1,22 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{concat, lit, when}
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
-import graft.sync.{DropCreate, JdbcDestination, LocalDestination, Truncate}
+import graft.sync.{DropCreate, JdbcDestination, LocalDestination, StagedCopy, Truncate}
 
-class DestinationSpec extends AnyFunSuite {
+class DestinationSpec extends AnyFunSuite with TimeLimits {
 
   lazy val spark = TestSpark.spark
 
@@ -63,5 +73,97 @@ class DestinationSpec extends AnyFunSuite {
       JdbcDestination.AzureDw)
     assert(p.action == DropCreate)
     assert(p.columnTypes == "a NVARCHAR(2000)")
+  }
+
+  implicit val signaler: Signaler = ThreadSignaler
+
+  /** Run one sink call; returns its row count and the Spark jobs it
+    * ran. Jobs are told apart by a job group, so work left running by
+    * other suites in the shared session is not counted.
+    */
+  private def jobsOf(call: => Long): (Long, Int) = {
+    val sc = spark.sparkContext
+    val group = s"destination-spec-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one sink call")
+    try {
+      val n = call
+      Bridge.drainListenerBus(sc)
+      (n, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def cachesEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty &&
+      spark.sparkContext.getPersistentRDDs.isEmpty
+
+  test("every sink counts its rows in the write's own single job, no cache") {
+    import spark.implicits._
+    // start from an empty cache, so what is left afterwards is the sinks'
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    val schema = StructType(Seq("id", "v").map(StructField(_, StringType)))
+    val multi = spark.range(0, 90, 1, 3).select($"id".cast("string").as("id"),
+      when($"id" % 10 === 0, lit("")).otherwise(concat(lit("v"), $"id")).as("v"))
+    val frames = Seq[(String, DataFrame, Long)](
+      ("zero_rows", multi.filter($"id".cast("int") > 1000), 0L),
+      ("zero_parts", spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], schema), 0L),
+      ("multi", multi, 90L))
+    assert(frames.head._2.rdd.getNumPartitions > 0)
+    assert(frames(1)._2.rdd.getNumPartitions == 0)
+    assert(multi.rdd.getNumPartitions == 3)
+
+    val base = Files.createTempDirectory("graft-counted")
+    val url = "jdbc:derby:memory:graftcounted;create=true"
+    val derby = JdbcDestination.Dialect("derby", "VARCHAR(255)")
+    for ((name, df, rows) <- frames) {
+      val sinks = Seq[(String, () => Long)](
+        "local" -> (() =>
+          LocalDestination.write(df, name, "local", base.toString).nRecords),
+        "dir" -> (() =>
+          LocalDestination.writeDir(df, name, "dir", base.toString).nRecords),
+        "redshift" -> (() => StagedCopy.redshift(df, name, "",
+          base.resolve("rs").toString, "b", "r").nRecords),
+        "snowflake" -> (() => StagedCopy.snowflake(df, name, "",
+          base.resolve("sf").toString).nRecords),
+        // the table is new, then existing with the same columns
+        "jdbc_create" -> (() => JdbcDestination.write(df, url,
+          JdbcDestination.plan(name, df.columns.toSeq, Nil, derby)
+            .copy(table = name)).nRecords),
+        "jdbc_truncate" -> (() => JdbcDestination.write(df, url,
+          JdbcDestination.plan(name, df.columns.toSeq, df.columns.toSeq,
+            derby).copy(table = name)).nRecords))
+      for ((sink, call) <- sinks) {
+        // a lost observation blocks the count forever: fail instead
+        val (n, jobs) = failAfter(Span(120, Seconds))(jobsOf(call()))
+        assert(n == rows, s"$sink/$name count")
+        assert(jobs == 1, s"$sink/$name ran $jobs Spark jobs")
+        assert(cachesEmpty, s"$sink/$name left a cache behind")
+      }
+    }
+
+    // blank cells are bare in every file sink, never quoted ""
+    def csvLines(dir: Path): Seq[String] =
+      scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .flatMap(p => Files.readAllLines(p).asScala).toList)
+    val local = Files.readAllLines(base.resolve("local/multi.csv")).asScala
+    val dir = csvLines(base.resolve("dir/multi"))
+    for (lines <- Seq(local.toSeq, dir)) {
+      assert(lines.contains("0,") && lines.contains("10,"))
+      assert(!lines.exists(_.contains("\"\"")), lines.take(3))
+    }
   }
 }

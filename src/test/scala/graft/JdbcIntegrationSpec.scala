@@ -58,4 +58,18 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       .option("url", url).option("dbtable", "my_table").load()
     assert(back3.columns.length == 3)
   }
+
+  test("a CSV with blank cells loads into VARCHAR columns and reads back ''") {
+    val f = java.nio.file.Files.createTempFile("graft-blank", ".csv")
+    java.nio.file.Files.writeString(f, "id,name,note\n1,,x\n2,beta,\n")
+    val df = graft.ingest.CsvIngest.read(spark, f.toString)
+    val p = JdbcDestination.plan("blank cells", df.columns.toSeq,
+      existingCols = Nil, derby)
+    val r = JdbcDestination.write(df, url, p.copy(table = "blank_cells"))
+    assert(r.nRecords == 2)
+    val back = spark.read.format("jdbc")
+      .option("url", url).option("dbtable", "blank_cells").load()
+      .orderBy("id").collect().map(_.toSeq)
+    assert(back.toSeq == Seq(Seq("1", "", "x"), Seq("2", "beta", "")))
+  }
 }

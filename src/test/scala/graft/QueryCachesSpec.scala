@@ -78,4 +78,16 @@ class QueryCachesSpec extends AnyFunSuite {
     QueryCaches.releaseAll() // must NOT touch handle-owned caches
     h.release()              // the owner cleans up
   }
+
+  test("a release that throws still restores the query-scoped confs") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
+    assert(spark.conf.getOption(key).isEmpty, "test precondition")
+    QueryCaches.withQueryConf(spark, key -> "7")
+    QueryCaches.onRelease(throw new IllegalStateException("release failed"))
+    val e = intercept[IllegalStateException](QueryCaches.releaseAll())
+    assert(e.getMessage == "release failed")
+    assert(spark.conf.getOption(key).isEmpty,
+      "a failed release left the query's conf set")
+    QueryCaches.releaseAll() // the ledger is empty: nothing throws again
+  }
 }
