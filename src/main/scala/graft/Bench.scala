@@ -22,15 +22,19 @@ object Bench {
     * reads the stdout tail, whose slowest-window ROTATES as queries
     * speed up — r18 manufactured 28 phantom "dropped" rows that way.
     * One line judging the WHOLE map makes rotation impossible to
-    * misread as coverage loss. Pure for unit-testing the boundaries.
+    * misread as coverage loss. A `failed` query's time is its
+    * time-to-crash, not a speed: it counts in `common` but in none of
+    * the three classes (the rest, common − faster − within − slower,
+    * is the failed count). Pure for unit-testing the boundaries.
     */
   def deltaCounts(results: Iterable[(String, Double)],
-      base: Map[String, Double]): (Int, Int, Int, Int) = {
-    val ratios = results.toSeq
-      .flatMap { case (k, v) => base.get(k).map(v / _) }
+      base: Map[String, Double],
+      failed: Set[String] = Set.empty): (Int, Int, Int, Int) = {
+    val common = results.toSeq.filter { case (k, _) => base.contains(k) }
+    val ratios = common.collect { case (k, v) if !failed(k) => v / base(k) }
     val faster = ratios.count(_ < 0.9)
     val slower = ratios.count(_ > 1.1)
-    (ratios.size, faster, ratios.size - faster - slower, slower)
+    (common.size, faster, ratios.size - faster - slower, slower)
   }
 
   /** Contention-guard fold: re-time each flagged row once (the least-
@@ -390,8 +394,9 @@ object Bench {
     // the slowest-window below rotates; this line says what happened
     // to EVERY common query so rotation can't read as coverage loss
     baseOpt.foreach { b =>
-      val (common, faster, within, slower) = deltaCounts(results, b)
-      val line = s"""{"delta_full":{"common":$common,"new":${results.size - common},"faster":$faster,"within10pct":$within,"slower":$slower}}"""
+      val (common, faster, within, slower) =
+        deltaCounts(results, b, failed.toSet)
+      val line = s"""{"delta_full":{"common":$common,"new":${results.size - common},"faster":$faster,"within10pct":$within,"slower":$slower,"failed":${common - faster - within - slower}}}"""
       extraLineBytes += line.length + 1
       println(line)
     }

@@ -99,4 +99,11 @@ object Tables {
   def scratchDir(spark: SparkSession, name: String): java.nio.file.Path =
     java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"${name}_${spark.sparkContext.applicationId}")
+
+  /** Per-run catalog table name `<name>_<application id>` — the
+    * [[scratchDir]] rule for tables, with the id's non-alphanumerics
+    * mapped to `_` so the name stays a plain identifier.
+    */
+  def scratchTable(spark: SparkSession, name: String): String =
+    s"${name}_${spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")}"
 }

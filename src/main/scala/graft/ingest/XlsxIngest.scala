@@ -317,29 +317,24 @@ object XlsxIngest {
       if (row <= rows && colNum <= cols) data(row - 1)(colNum - 1) = value
     }
 
-    // trailing-empty-row trim with early cut-off + max-col scan
-    // (xlsparser.js:189-210): scanning bottom-up, pop empty rows only
-    // until the first non-empty one; track the max used column index.
+    // trailing-empty-row trim + max-col scan (xlsparser.js:189-210):
+    // one pass finds the last non-empty row and the widest non-empty
+    // column; empty rows above the last non-empty one are kept.
+    var lastRow = -1
     var maxColPos = -1
-    var haveRowsBelow = false
-    val buf = mutable.ArrayBuffer.empty[Array[String]] ++ data
-    var i = buf.length - 1
-    while (i >= 0) {
-      val row = buf(i)
-      var isEmpty = true
-      var j = row.length - 1
-      while (j >= 0 && isEmpty) {
-        if (row(j) != "") {
-          isEmpty = false
-          if (j > maxColPos) maxColPos = j
-        }
-        j -= 1
+    var i = 0
+    while (i < rows) {
+      val row = data(i)
+      var j = cols - 1
+      while (j >= 0 && row(j) == "") j -= 1
+      if (j >= 0) {
+        lastRow = i
+        if (j > maxColPos) maxColPos = j
       }
-      if (!isEmpty) haveRowsBelow = true
-      else if (!haveRowsBelow) buf.remove(i)
-      i -= 1
+      i += 1
     }
-    buf.map(_.take(maxColPos + 1).toVector).toVector
+    data.iterator.take(lastRow + 1)
+      .map(_.take(maxColPos + 1).toVector).toVector
   }
 
   /** JS `parseInt`: optional sign + leading digit run; else None. */

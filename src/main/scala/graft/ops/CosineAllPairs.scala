@@ -173,23 +173,13 @@ object CosineAllPairs {
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
     val (tf, sz, pref) =
       tfFrames(df, idCol, textCol, shingleN, threshold, handle)
-    if (maxPrefixPosting == Int.MaxValue)
-      pref.count() // eager: both candidate sides read it
-    else {
-      // audit, not cap (the family rule) — collect doubles as the
-      // eager materializer
-      val worst = TextDedup.overCapBuckets(pref, Seq("shingle"),
-          maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"CosineAllPairs: prefix posting for shingle " +
-          s"'${r.getString(0)}' has ${r.getLong(1)} members " +
-          s"(> maxPrefixPosting=$maxPrefixPosting) — the candidate " +
-          "join would fan out quadratically on it; raise the bound " +
-          "if the fan-out is affordable"
-      })
+    // audit, not cap (the family rule) — it doubles as the eager
+    // materializer both candidate sides read
+    TextDedup.auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"CosineAllPairs: prefix posting for shingle '$s' has $n members " +
+        s"(> maxPrefixPosting=$maxPrefixPosting) — the candidate join " +
+        "would fan out quadratically on it; raise the bound if the " +
+        "fan-out is affordable"
     }
     candidateVerify(tf, sz, pref, idCol, threshold, handle)
   }
@@ -316,21 +306,11 @@ object CosineAllPairs {
         .withColumn("sfx", sum(col("w") * col("maxw")).over(byDocDesc))
         .filter(col("sfx") >= lit(threshold - 1e-9))
         .select(col("__side"), col(idCol), col("shingle"), col("rn")))
-    if (maxPrefixPosting == Int.MaxValue)
-      pref.count() // eager: both candidate sides read it
-    else {
-      val worst = TextDedup.overCapBuckets(pref, Seq("shingle"),
-          maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"CosineAllPairs.pairsAgainst: prefix posting for shingle " +
-          s"'${r.getString(0)}' has ${r.getLong(1)} members across " +
-          s"corpus+batch (> maxPrefixPosting=$maxPrefixPosting) — the " +
-          "cross candidate join would fan out on it; raise the bound " +
-          "if the fan-out is affordable"
-      })
+    TextDedup.auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"CosineAllPairs.pairsAgainst: prefix posting for shingle '$s' " +
+        s"has $n members across corpus+batch (> maxPrefixPosting=" +
+        s"$maxPrefixPosting) — the cross candidate join would fan out " +
+        "on it; raise the bound if the fan-out is affordable"
     }
     // cross candidate join keyed on the LONG rank (injective on
     // shingles — identical candidates, cheap hash/compare over the
@@ -391,11 +371,11 @@ object CosineAllPairs {
     *  - `<prefix>_raised` (shingle) — an append-only log of shingles
     *    whose frozen maxw a later [[appendIndex]] batch EXCEEDED
     *    (empty at build);
-    *  - `<prefix>_meta` (tau_build, shingle_n, buckets) — the
-    *    enforced build contract ([[TextDedup.writePrefixIndex]]'s
-    *    sidecar rule): τ' < τ_build or a shingleN mismatch is
-    *    rejected by the reader/append instead of silently losing
-    *    pairs.
+    *  - `<prefix>_meta` (tau_build, shingle_n, buckets, shard_by) —
+    *    the enforced build contract, owned by [[StandingIndex]] like
+    *    the naming and shard layout: τ' < τ_build or a shingleN
+    *    mismatch is rejected by the reader/append instead of silently
+    *    losing pairs.
     *
     * Why the Jaccard frozen-rank proof does NOT carry over verbatim
     * (the [[pairsAgainst]] scaladoc's flagged hazard): the cosine
@@ -420,10 +400,9 @@ object CosineAllPairs {
     * the corpus postings tonight touches (append drift), and the
     * raised-shingle compensation fan-out per run.
     *
-    * `shardBy` > 0 layers the [[TextDedup.writePrefixIndex]]
-    * storage-pruning scheme UNDER the bucketing: `_rank`/`_pref`/
-    * `_tfs` shard on `pmod(hash(shingle), shardBy)` and `_tf` on the
-    * id hash; the reader prunes the shingle-keyed tables to
+    * `shardBy` > 0 layers the [[StandingIndex]] storage-pruning
+    * scheme UNDER the bucketing: `_rank`/`_pref`/`_tfs` shard on the
+    * shingle hash and `_tf` on the id hash; the reader prunes the shingle-keyed tables to
     * tonight's batch shingle shards and the `_tf` VERIFY scan to the
     * candidate ids' shards (prefix candidates always; plus the
     * compensation candidates' shards on raised nights) — corpus
@@ -447,7 +426,8 @@ object CosineAllPairs {
       s"threshold in (0, 1], got $threshold")
     require(maxPrefixPosting > 0,
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
-    require(shardBy >= 0, s"shardBy must be >= 0, got $shardBy")
+    val idx = StandingIndex.build(corpus.sparkSession, tablePrefix,
+      pathPrefix, StandingIndex.Meta(threshold, shingleN, buckets, shardBy))
     val tf = CacheHandle.persistWith(handle,
       TextDedup.shingles(corpus, idCol, textCol, shingleN, dedup = false)
         .groupBy(idCol, "shingle").agg(count(lit(1)).as("tf")))
@@ -476,81 +456,38 @@ object CosineAllPairs {
         .withColumn("sfx", sum(col("w") * col("maxw")).over(byDocDesc))
         .filter(col("sfx") >= lit(threshold - 1e-9))
         .select(col("shingle"), col(idCol)))
-    // build-time audit — the collect doubles as pref's materializer
-    if (maxPrefixPosting == Int.MaxValue) pref.count()
-    else {
-      val worst = TextDedup.overCapBuckets(pref, Seq("shingle"),
-          maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"CosineAllPairs.writeIndex: corpus prefix posting for " +
-          s"shingle '${r.getString(0)}' has ${r.getLong(1)} members " +
-          s"(> maxPrefixPosting=$maxPrefixPosting) — every nightly " +
-          "cross join would fan out on it; raise the bound or dedup " +
-          "the corpus before indexing"
-      })
+    // build-time audit — it doubles as pref's materializer
+    TextDedup.auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"CosineAllPairs.writeIndex: corpus prefix posting for shingle " +
+        s"'$s' has $n members (> maxPrefixPosting=$maxPrefixPosting) — " +
+        "every nightly cross join would fan out on it; raise the bound " +
+        "or dedup the corpus before indexing"
     }
-    def p(suffix: String): Option[String] = pathPrefix.map(_ + suffix)
-    def sharded(df: DataFrame, key: String): DataFrame =
-      if (shardBy > 0)
-        df.withColumn("__shard", pmod(hash(col(key)), lit(shardBy)))
-      else df
-    val pc = if (shardBy > 0) Some("__shard") else None
-    val sp = corpus.sparkSession
     // the six table writes are INDEPENDENT once the shared frames are
     // materialized (tf/sz/rankTab/pref caches are all warm here): run
     // them concurrently so each write's commit/catalog tail backfills
     // the others' idle executors (guide §2.6 — actions are only
     // sequential because the driver calls them sequentially)
     ScaleOps.concurrently(
-      () => ScaleOps.writeBucketed(sharded(rankTab, "shingle"),
-        s"${tablePrefix}_rank", "shingle", buckets, p("_rank"), pc),
-      () => ScaleOps.writeBucketed(sharded(pref, "shingle"),
-        s"${tablePrefix}_pref", "shingle", buckets, p("_pref"), pc),
-      () => ScaleOps.writeBucketed(
-        sharded(tf.join(sz, idCol).select(col(idCol), col("shingle"),
-          col("tf"), col("na2")), idCol),
-        s"${tablePrefix}_tf", idCol, buckets, p("_tf"), pc),
-      () => ScaleOps.writeBucketed(
-        sharded(tf.select(col("shingle"), col(idCol)), "shingle"),
-        s"${tablePrefix}_tfs", "shingle", buckets, p("_tfs"), pc),
+      () => idx.write(rankTab, "rank", "shingle"),
+      () => idx.write(pref, "pref", "shingle"),
+      () => idx.write(tf.join(sz, idCol).select(col(idCol), col("shingle"),
+        col("tf"), col("na2")), "tf", idCol),
+      () => idx.write(tf.select(col("shingle"), col(idCol)), "tfs",
+        "shingle"),
       () => {
         // `_raised` starts EMPTY (appends log into it); overwrite
         // makes a rebuild reset the log with the prefixes it
         // invalidates
-        val emptyRaised = sp.createDataFrame(
+        val sp = corpus.sparkSession
+        idx.writeSmall(sp.createDataFrame(
           sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("shingle",
-              org.apache.spark.sql.types.StringType, nullable = true))))
-        val rw = emptyRaised.coalesce(1).write.mode("overwrite")
-          .format("parquet")
-        p("_raised").fold(rw.saveAsTable(s"${tablePrefix}_raised"))(pp =>
-          rw.option("path", pp).saveAsTable(s"${tablePrefix}_raised"))
+              org.apache.spark.sql.types.StringType, nullable = true)))),
+          "raised")
       },
-      () => {
-        import sp.implicits._
-        val mw = Seq((threshold, shingleN, buckets, shardBy))
-          .toDF("tau_build", "shingle_n", "buckets", "shard_by")
-          .coalesce(1).write.mode("overwrite").format("parquet")
-        p("_meta").fold(mw.saveAsTable(s"${tablePrefix}_meta"))(pp =>
-          mw.option("path", pp).saveAsTable(s"${tablePrefix}_meta"))
-      })
-  }
-
-  /** Read the 1-row `_meta` sidecar written by [[writeIndex]]:
-    * (tau_build, shingle_n, buckets, shard_by).
-    */
-  private def readMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): (Double, Int, Int, Int) = {
-    val r = spark.table(s"${tablePrefix}_meta").collect().head
-    (r.getDouble(r.fieldIndex("tau_build")),
-      r.getInt(r.fieldIndex("shingle_n")),
-      r.getInt(r.fieldIndex("buckets")),
-      r.getInt(r.fieldIndex("shard_by")))
+      () => idx.writeMeta())
   }
 
   /** Nightly-incremental cosine AllPairs against a standing-corpus
@@ -613,15 +550,8 @@ object CosineAllPairs {
       s"threshold in (0, 1], got $threshold")
     require(maxPrefixPosting > 0,
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
-    val (tauBuild, shNBuild, _, shardBy) = readMeta(spark, tablePrefix)
-    require(threshold >= tauBuild,
-      s"CosineAllPairs.pairsAgainstIndexed: threshold $threshold < " +
-        s"the index's build threshold $tauBuild — stored prefixes are " +
-        "cut at the build τ and a looser read would silently lose " +
-        "pairs; rebuild the index at the looser τ")
-    require(shingleN == shNBuild,
-      s"CosineAllPairs.pairsAgainstIndexed: shingleN $shingleN does " +
-        s"not match the index's build shingleN $shNBuild")
+    val idx = StandingIndex.forRead(spark, tablePrefix,
+      "CosineAllPairs.pairsAgainstIndexed", threshold, shingleN)
     val btf = CacheHandle.persistWith(handle,
       TextDedup.shingles(batch, idCol, textCol, shingleN, dedup = false)
         .groupBy(idCol, "shingle").agg(count(lit(1)).as("tf")))
@@ -633,18 +563,9 @@ object CosineAllPairs {
         (col("tf").cast("double") /
           sqrt(col("na2").cast("double"))).as("w"))
     // shard pruning (sharded builds only): a rank/prefix row outside
-    // tonight's batch shingle shard set can match no batch shingle —
-    // prune whole directories before a byte is read; the shard-set
-    // collect is bounded by shardBy (a build-time literal)
-    val shingleShards: Seq[Int] =
-      if (shardBy <= 0) Nil
-      else btf
-        .select(pmod(hash(col("shingle")), lit(shardBy)).as("__shard"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-    def pruned(t: DataFrame): DataFrame =
-      if (shardBy <= 0) t
-      else t.filter(col("__shard").isin(shingleShards: _*)).drop("__shard")
-    val rank = pruned(spark.table(s"${tablePrefix}_rank"))
+    // tonight's batch shingle shard set can match no batch shingle
+    val shingleShards = idx.shardsOf("shingle", btf)
+    val rank = idx.read("rank", shingleShards)
     // R: shingles whose frozen maxw tonight's batch exceeds, plus
     // shingles some append exceeded (`_raised`), restricted to
     // tonight's shingles (a raised shingle the batch doesn't contain
@@ -655,7 +576,7 @@ object CosineAllPairs {
       .select("shingle")
     val raised = CacheHandle.persistWith(handle,
       braise.unionAll(
-        spark.table(s"${tablePrefix}_raised")
+        spark.table(idx.table("raised"))
           .join(btf.select("shingle").distinct(),
             Seq("shingle"), "left_semi"))
         .distinct())
@@ -681,75 +602,53 @@ object CosineAllPairs {
           sum(col("w") * coalesce(col("maxw"), lit(0.0))).over(wDesc))
         .filter(col("sfx") >= lit(threshold - 1e-9))
         .select(col(idCol), col("shingle")))
-    val cpref = pruned(spark.table(s"${tablePrefix}_pref"))
+    val cpref = idx.read("pref", shingleShards)
     // the shingle-keyed posting copy serves the raised paths — the
     // compensation lookup and its audit read it bucketed (and
     // shard-pruned) on shingle, so raised nights stay batch-sized
-    val ctfs = pruned(spark.table(s"${tablePrefix}_tfs"))
-    if (maxPrefixPosting == Int.MaxValue)
-      bpref.count() // eager: candidate join + audit would race it
-    else {
-      // the BATCH factor of the cross fan-out
-      val worst = TextDedup.overCapBuckets(bpref, Seq("shingle"),
-          maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"CosineAllPairs.pairsAgainstIndexed: batch prefix posting " +
-          s"for shingle '${r.getString(0)}' has ${r.getLong(1)} " +
-          s"members (> maxPrefixPosting=$maxPrefixPosting) — the " +
-          "cross candidate join would fan out on it; raise the bound " +
-          "if the fan-out is affordable"
-      })
+    val ctfs = idx.read("tfs", shingleShards)
+    // the BATCH factor of the cross fan-out; the audit (or its count,
+    // unbounded) materializes bpref before the candidate join reads it
+    TextDedup.auditShinglePostings(bpref, maxPrefixPosting) { (s, n) =>
+      s"CosineAllPairs.pairsAgainstIndexed: batch prefix posting for " +
+        s"shingle '$s' has $n members (> maxPrefixPosting=" +
+        s"$maxPrefixPosting) — the cross candidate join would fan out " +
+        "on it; raise the bound if the fan-out is affordable"
+    }
+    // the corpus prefix postings tonight touches: left-semi keyed on
+    // the bucket key, zero corpus exchange, batch-sized output
+    val touched = cpref.join(bpref.select("shingle").distinct(),
+      Seq("shingle"), "left_semi")
+    val ctfsRaised = ctfs.join(raised, Seq("shingle"), "left_semi")
+    if (maxPrefixPosting != Int.MaxValue) {
       // the CORPUS factor tonight touches (append drift — the
-      // prefixJaccardAgainstIndexed rule): left-semi keyed on the
-      // bucket key, zero corpus exchange, batch-sized output
-      val cworst = TextDedup.overCapBuckets(
-          cpref.join(bpref.select("shingle").distinct(),
-            Seq("shingle"), "left_semi"),
-          Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(cworst.isEmpty, {
-        val r = cworst.head
+      // prefixJaccardAgainstIndexed rule)
+      TextDedup.auditShinglePostings(touched, maxPrefixPosting) { (s, n) =>
         s"CosineAllPairs.pairsAgainstIndexed: corpus prefix posting " +
-          s"for batch-touched shingle '${r.getString(0)}' has " +
-          s"${r.getLong(1)} members (> maxPrefixPosting=" +
-          s"$maxPrefixPosting) — appends have grown it past the " +
-          "build-time audit; rebuild the index (one writeIndex) or " +
-          "raise the bound if the fan-out is affordable"
-      })
+          s"for batch-touched shingle '$s' has $n members (> " +
+          s"maxPrefixPosting=$maxPrefixPosting) — appends have grown it " +
+          "past the build-time audit; rebuild the index (one " +
+          "writeIndex) or raise the bound if the fan-out is affordable"
+      }
       if (nRaised > 0) {
         // both factors of the raised-shingle compensation fan-out:
         // full corpus postings and full batch postings on R
-        val rworst = TextDedup.overCapBuckets(
-            ctfs.join(raised, Seq("shingle"), "left_semi"),
-            Seq("shingle"), maxPrefixPosting)
-          .orderBy(col("n_members").desc, col("shingle"))
-          .limit(1).collect()
-        require(rworst.isEmpty, {
-          val r = rworst.head
-          s"CosineAllPairs.pairsAgainstIndexed: corpus full posting " +
-            s"for RAISED shingle '${r.getString(0)}' has " +
-            s"${r.getLong(1)} members (> maxPrefixPosting=" +
-            s"$maxPrefixPosting) — the compensation join would fan " +
-            "out on it; rebuild the index (refreezes maxw) or raise " +
-            "the bound if the fan-out is affordable"
-        })
-        val bworst = TextDedup.overCapBuckets(
+        TextDedup.auditShinglePostings(ctfsRaised, maxPrefixPosting) {
+          (s, n) =>
+            s"CosineAllPairs.pairsAgainstIndexed: corpus full posting " +
+              s"for RAISED shingle '$s' has $n members (> " +
+              s"maxPrefixPosting=$maxPrefixPosting) — the compensation " +
+              "join would fan out on it; rebuild the index (refreezes " +
+              "maxw) or raise the bound if the fan-out is affordable"
+        }
+        TextDedup.auditShinglePostings(
             btf.join(raised, Seq("shingle"), "left_semi"),
-            Seq("shingle"), maxPrefixPosting)
-          .orderBy(col("n_members").desc, col("shingle"))
-          .limit(1).collect()
-        require(bworst.isEmpty, {
-          val r = bworst.head
-          s"CosineAllPairs.pairsAgainstIndexed: batch full posting " +
-            s"for RAISED shingle '${r.getString(0)}' has " +
-            s"${r.getLong(1)} members (> maxPrefixPosting=" +
-            s"$maxPrefixPosting) — the compensation join would fan " +
-            "out on it; raise the bound if the fan-out is affordable"
-        })
+            maxPrefixPosting) { (s, n) =>
+          s"CosineAllPairs.pairsAgainstIndexed: batch full posting for " +
+            s"RAISED shingle '$s' has $n members (> maxPrefixPosting=" +
+            s"$maxPrefixPosting) — the compensation join would fan out " +
+            "on it; raise the bound if the fan-out is affordable"
+        }
       }
     }
     // prefix candidates: batch prefix postings against the bucketed
@@ -769,8 +668,7 @@ object CosineAllPairs {
       else prefCand.unionAll(
         btf.join(raised, Seq("shingle"), "left_semi")
           .select(col(idCol).as("a"), col("shingle"))
-          .join(ctfs.join(raised, Seq("shingle"), "left_semi")
-            .select(col("shingle"), col(idCol).as("b")),
+          .join(ctfsRaised.select(col("shingle"), col(idCol).as("b")),
             Seq("shingle"))
           .select(col("a"), col("b")))).distinct())
     cand.count()
@@ -778,23 +676,8 @@ object CosineAllPairs {
     // comes from a batch-touched prefix posting or a raised-shingle
     // posting, so the candidate id shard set is derivable BEFORE the
     // verify join — keyed semi-lookups, collects bounded by shardBy
-    val ctfVerify = {
-      if (shardBy <= 0) spark.table(s"${tablePrefix}_tf")
-      else {
-        val prefIds = cpref
-          .join(bpref.select("shingle").distinct(),
-            Seq("shingle"), "left_semi")
-          .select(pmod(hash(col(idCol)), lit(shardBy)).as("__s"))
-        val allIds =
-          if (nRaised == 0) prefIds
-          else prefIds.unionAll(
-            ctfs.join(raised, Seq("shingle"), "left_semi")
-              .select(pmod(hash(col(idCol)), lit(shardBy)).as("__s")))
-        val idShards = allIds.distinct().collect().map(_.getInt(0)).toSeq
-        spark.table(s"${tablePrefix}_tf")
-          .filter(col("__shard").isin(idShards: _*)).drop("__shard")
-      }
-    }
+    val ctfVerify = idx.read("tf", idx.shardsOf(idCol,
+      touched +: (if (nRaised == 0) Nil else Seq(ctfsRaised)): _*))
     // exact verify: pull each candidate corpus doc's tf vector from
     // the id-bucketed table (zero corpus exchange — the join key is
     // the bucket key); nb2 rides along (functionally determined by b)
@@ -848,19 +731,8 @@ object CosineAllPairs {
       handle: CacheHandle = null): Unit = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0, 1], got $threshold")
-    val (tauBuild, shNBuild, bkBuild, shardBy) =
-      readMeta(spark, tablePrefix)
-    require(threshold == tauBuild,
-      s"CosineAllPairs.appendIndex: threshold $threshold != the " +
-        s"index's build threshold $tauBuild — appended prefixes must " +
-        "be cut exactly like the stored ones or readers between the " +
-        "two τs silently lose pairs")
-    require(shingleN == shNBuild,
-      s"CosineAllPairs.appendIndex: shingleN $shingleN does not " +
-        s"match the index's build shingleN $shNBuild")
-    require(buckets == bkBuild,
-      s"CosineAllPairs.appendIndex: buckets $buckets does not match " +
-        s"the index's build buckets $bkBuild")
+    val idx = StandingIndex.forAppend(spark, tablePrefix,
+      "CosineAllPairs.appendIndex", threshold, shingleN, buckets)
     val btf = CacheHandle.persistWith(handle,
       TextDedup.shingles(batch, idCol, textCol, shingleN, dedup = false)
         .groupBy(idCol, "shingle").agg(count(lit(1)).as("tf")))
@@ -873,15 +745,7 @@ object CosineAllPairs {
           sqrt(col("na2").cast("double"))).as("w"))
     // sharded builds: the rank lookup only needs the batch's shingle
     // shards (a rank row elsewhere cannot match a batch shingle)
-    val rank =
-      if (shardBy <= 0) spark.table(s"${tablePrefix}_rank")
-      else {
-        val shards = btf
-          .select(pmod(hash(col("shingle")), lit(shardBy)).as("__shard"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        spark.table(s"${tablePrefix}_rank")
-          .filter(col("__shard").isin(shards: _*)).drop("__shard")
-      }
+    val rank = idx.read("rank", idx.shardsOf("shingle", btf))
     val bmax = CacheHandle.persistWith(handle,
       bwn.groupBy("shingle").agg(max(col("w")).as("bmaxw")))
     bmax.count() // eager: the rank append, raised log + prefix read it
@@ -915,31 +779,18 @@ object CosineAllPairs {
         sum(col("w") * coalesce(col("maxw"), col("bmaxw"))).over(wDesc))
       .filter(col("sfx") >= lit(threshold - 1e-9))
       .select(col("shingle"), col(idCol))
-    // sharded builds: appended rows land in their key's shard
-    // directory (same hash as the build) so reader pruning stays
-    // exact across appends
-    def sharded(df: DataFrame, key: String): DataFrame =
-      if (shardBy > 0)
-        df.withColumn("__shard", pmod(hash(col(key)), lit(shardBy)))
-      else df
-    val pc = if (shardBy > 0) Some("__shard") else None
     // write order: everything that READS the pre-append `_rank` table
     // (the raised log, the prefix cut) must run before the `_rank`
     // append lands; `_raised`/`_pref`/`_tf`/`_tfs` target distinct
     // tables none of the group reads, so they overlap (guide §2.6)
     ScaleOps.concurrently(
       () => raisedLog.write.mode("append").format("parquet")
-        .saveAsTable(s"${tablePrefix}_raised"),
-      () => ScaleOps.appendBucketed(sharded(newPref, "shingle"),
-        s"${tablePrefix}_pref", "shingle", buckets, pc),
-      () => ScaleOps.appendBucketed(
-        sharded(btf.join(bsz, idCol).select(col(idCol), col("shingle"),
-          col("tf"), col("na2")), idCol),
-        s"${tablePrefix}_tf", idCol, buckets, pc),
-      () => ScaleOps.appendBucketed(
-        sharded(btf.select(col("shingle"), col(idCol)), "shingle"),
-        s"${tablePrefix}_tfs", "shingle", buckets, pc))
-    ScaleOps.appendBucketed(sharded(newRank, "shingle"),
-      s"${tablePrefix}_rank", "shingle", buckets, pc)
+        .saveAsTable(idx.table("raised")),
+      () => idx.append(newPref, "pref", "shingle"),
+      () => idx.append(btf.join(bsz, idCol).select(col(idCol),
+        col("shingle"), col("tf"), col("na2")), "tf", idCol),
+      () => idx.append(btf.select(col("shingle"), col(idCol)), "tfs",
+        "shingle"))
+    idx.append(newRank, "rank", "shingle")
   }
 }

@@ -49,9 +49,12 @@ object ScaleOps {
     * full-revert 151.3 s vs flags-on 194.4 s on the 22-query set).
     * The floor bounds the residual hazard INSIDE the opted-in queries:
     * their own dense stages (candidate fan-outs) keep at least
-    * max(2, defaultParallelism/4) slots — the bisect's floor-8 config
-    * beat the unfloored flags on every opted-in query (nightly_cos
-    * 16.5 vs 24.3 s, cosine_incr_append 10.7 vs 13.5 s).
+    * max(2, defaultParallelism/4) slots when they shuffle at least
+    * 1 MB per slot (`coalescePartitions.minPartitionSize`: Spark never
+    * cuts a partition smaller; ScaleOpsSpec pins the floor). The
+    * bisect's floor-8 config beat the unfloored flags on every
+    * opted-in query (nightly_cos 16.5 vs 24.3 s, cosine_incr_append
+    * 10.7 vs 13.5 s).
     */
   def byteSizedAqe(spark: org.apache.spark.sql.SparkSession): Unit = {
     val floor = math.max(2, spark.sparkContext.defaultParallelism / 4)

@@ -323,6 +323,27 @@ object TextDedup {
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxBucket)
 
+  /** The exact family's hot-posting AUDIT — never a cap, which would
+    * break the losslessness proof: fails with `failure(shingle,
+    * n_members)` naming the worst `shingle` posting of `postings`
+    * past `maxPosting` (one map-side-combined aggregate + a limit(1)
+    * argmax, a bounded collect by construction). Exactly one Spark
+    * action either way, and it doubles as the eager materializer of a
+    * persisted `postings` frame: the argmax collect, or a plain count
+    * when `maxPosting` is `Int.MaxValue` (no bound to audit).
+    */
+  private[ops] def auditShinglePostings(
+      postings: DataFrame, maxPosting: Int)(
+      failure: (String, Long) => String): Unit =
+    if (maxPosting == Int.MaxValue) postings.count()
+    else {
+      val worst = overCapBuckets(postings, Seq("shingle"), maxPosting)
+        .orderBy(col("n_members").desc, col("shingle"))
+        .limit(1).collect()
+      require(worst.isEmpty,
+        failure(worst.head.getString(0), worst.head.getLong(1)))
+    }
+
   /** Candidate pairs (a < b) sharing at least one band, from buckets
     * within `maxBucket` members (pass `Int.MaxValue` to skip the cap —
     * e.g. when the input was already capped and cached upstream).
@@ -816,27 +837,14 @@ object TextDedup {
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
     val (sh, sz, pref) =
       prefixFrames(df, idCol, textCol, shingleN, threshold, handle,
-        // the audit collect below doubles as the eager materializer
-        eagerPref = maxPrefixPosting == Int.MaxValue)
-    if (maxPrefixPosting != Int.MaxValue) {
-      // audit, not cap: dropping a hot posting would break the
-      // losslessness proof, so a posting past the bound FAILS with the
-      // worst offender named. One map-side-combined aggregate + a
-      // limit(1) argmax over the prefix frame (bounded collect by
-      // construction) — this action is ALSO the eager materializer of
-      // the persisted prefix frame for the self-join sides.
-      val worst = overCapBuckets(pref, Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"prefixJaccardPairs: prefix posting for shingle " +
-          s"'${r.getString(0)}' has ${r.getLong(1)} members " +
-          s"(> maxPrefixPosting=$maxPrefixPosting) — the candidate " +
-          "join would fan out quadratically on it; raise the bound " +
-          "if the fan-out is affordable, or use the lossy " +
-          "prefixJaccardPairsCapped twin"
-      })
+        // the audit below materializes it for the self-join sides
+        eagerPref = false)
+    auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"prefixJaccardPairs: prefix posting for shingle '$s' has $n " +
+        s"members (> maxPrefixPosting=$maxPrefixPosting) — the " +
+        "candidate join would fan out quadratically on it; raise the " +
+        "bound if the fan-out is affordable, or use the lossy " +
+        "prefixJaccardPairsCapped twin"
     }
     prefixCandidateVerify(sh, sz, pref, idCol, threshold, handle)
   }
@@ -977,25 +985,15 @@ object TextDedup {
           col("sz") - floor(lit(threshold) * col("sz").cast("double")) + 1L)
         .select(col("__side"), col(idCol), col("shingle"), col("sz"),
           col("rn")))
-    if (maxPrefixPosting == Int.MaxValue)
-      pref.count() // eager: both candidate sides read it
-    else {
-      // same hot-posting AUDIT as the within-corpus join (the family
-      // contract: the exact path fails loudly rather than fanning out
-      // quadratically on a degenerate corpus); posting size counts
-      // BOTH sides — that union is what the cross join fans out on.
-      // The collect doubles as the prefix frame's eager materializer.
-      val worst = overCapBuckets(pref, Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"prefixJaccardAgainst: prefix posting for shingle " +
-          s"'${r.getString(0)}' has ${r.getLong(1)} members across " +
-          s"corpus+batch (> maxPrefixPosting=$maxPrefixPosting) — the " +
-          "cross candidate join would fan out quadratically on it; " +
-          "raise the bound if the fan-out is affordable"
-      })
+    // same hot-posting AUDIT as the within-corpus join, materializing
+    // pref for both candidate sides; posting size counts BOTH sides —
+    // that union is what the cross join fans out on
+    auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"prefixJaccardAgainst: prefix posting for shingle '$s' has $n " +
+        s"members across corpus+batch (> maxPrefixPosting=" +
+        s"$maxPrefixPosting) — the cross candidate join would fan out " +
+        "quadratically on it; raise the bound if the fan-out is " +
+        "affordable"
     }
     val la = pref.filter(col("__side") === 1)
       .select(col(idCol).as("a"), col("rn"), col("sz").as("sa"))
@@ -1054,11 +1052,11 @@ object TextDedup {
     * a nightly run at threshold' > threshold stays lossless (stored
     * prefixes are longer than that cut needs — over-inclusive only);
     * threshold' < threshold would need prefixes the index never
-    * stored. That contract is ENFORCED, not trusted: a fourth 1-row
-    * sidecar table `<prefix>_meta` (tau_build, shingle_n, buckets)
-    * is written with the index, and both the reader and
-    * [[appendPrefixIndex]] reject a call that violates it instead of
-    * silently losing pairs.
+    * stored. That contract is ENFORCED, not trusted: the
+    * [[StandingIndex]] `_meta` sidecar (tau_build, shingle_n,
+    * buckets, shard_by) is written with the index, and both the
+    * reader and [[appendPrefixIndex]] reject a call that violates it
+    * instead of silently losing pairs.
     *
     * The family's hot-posting audit runs at BUILD time over the
     * corpus prefix postings (fail loud once per rebuild, not at 3am
@@ -1069,8 +1067,9 @@ object TextDedup {
     * build-time audit — see [[appendPrefixIndex]]).
     *
     * `shardBy` > 0 additionally partitions all three tables into hive
-    * directories UNDER the bucketing — `_rank`/`_pref` on
-    * `pmod(hash(shingle), shardBy)`, `_sh` on the id hash: the reader
+    * directories UNDER the bucketing (the [[StandingIndex]] shard
+    * layout) — `_rank`/`_pref` on the shingle hash, `_sh` on the id
+    * hash: the reader
     * collects tonight's batch shingle-shard set, prunes untouched
     * `_rank`/`_pref` directories, derives the candidate corpus IDs'
     * shard set from the batch-touched prefix postings (one keyed
@@ -1101,7 +1100,8 @@ object TextDedup {
       s"threshold in (0, 1], got $threshold")
     require(maxPrefixPosting > 0,
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
-    require(shardBy >= 0, s"shardBy must be >= 0, got $shardBy")
+    val idx = StandingIndex.build(corpus.sparkSession, tablePrefix,
+      pathPrefix, StandingIndex.Meta(threshold, shingleN, buckets, shardBy))
     val sh = CacheHandle.persistWith(handle,
       shingles(corpus, idCol, textCol, shingleN))
     // no standalone sh.count: the rank's internal shaping action is
@@ -1122,81 +1122,25 @@ object TextDedup {
         .filter(col("p") <=
           col("sz") - floor(lit(threshold) * col("sz").cast("double")) + 1L)
         .select(col("shingle"), col(idCol), col("sz")))
-    // build-time audit — the collect doubles as pref's materializer
-    // (the prefixJaccardPairs pattern)
-    if (maxPrefixPosting == Int.MaxValue) pref.count()
-    else {
-      val worst = overCapBuckets(pref, Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"writePrefixIndex: corpus prefix posting for shingle " +
-          s"'${r.getString(0)}' has ${r.getLong(1)} members " +
-          s"(> maxPrefixPosting=$maxPrefixPosting) — every nightly " +
-          "cross join would fan out on it; raise the bound or dedup " +
-          "the corpus before indexing"
-      })
+    // build-time audit — it doubles as pref's materializer
+    auditShinglePostings(pref, maxPrefixPosting) { (s, n) =>
+      s"writePrefixIndex: corpus prefix posting for shingle '$s' has " +
+        s"$n members (> maxPrefixPosting=$maxPrefixPosting) — every " +
+        "nightly cross join would fan out on it; raise the bound or " +
+        "dedup the corpus before indexing"
     }
-    def p(suffix: String): Option[String] = pathPrefix.map(_ + suffix)
-    // shardBy > 0 layers hive directory partitions on a hash of the
-    // bucket key UNDER the bucketing for the shingle-keyed tables: the
-    // reader collects tonight's batch shard set (bounded by shardBy)
-    // and prunes whole directories — corpus bytes read scale with the
-    // batch's shingle footprint, not the corpus (the storage-pruning
-    // path toward a sublinear nightly; the bucketed zero-exchange
-    // join layout is preserved inside every directory)
-    val shardOf = (c: org.apache.spark.sql.Column) =>
-      pmod(hash(c), lit(shardBy))
-    def shingleSharded(df: DataFrame): DataFrame =
-      if (shardBy > 0) df.withColumn("__shard", shardOf(col("shingle")))
-      else df
-    val pc = if (shardBy > 0) Some("__shard") else None
-    // `_sh` shards on the ID hash (its bucket key): the reader derives
-    // the candidate corpus ids' shard set from the batch-touched
-    // prefix postings and prunes the verify-side scan the same way
-    val shOut =
-      if (shardBy > 0)
-        sh.select(col(idCol), col("shingle"))
-          .withColumn("__shard", shardOf(col(idCol)))
-      else sh.select(col(idCol), col("shingle"))
-    val sp = corpus.sparkSession
     // the four table writes are INDEPENDENT once the shared frames
     // are materialized (sh/ranked/pref caches are warm here): run
     // them concurrently so each write's commit/catalog tail backfills
-    // the others' idle executors (guide §2.6)
+    // the others' idle executors (guide §2.6). `_sh` buckets and
+    // shards on the ID: the reader derives the candidate corpus ids'
+    // shard set from the batch-touched prefix postings and prunes the
+    // verify-side scan the same way.
     ScaleOps.concurrently(
-      () => ScaleOps.writeBucketed(shingleSharded(ranked),
-        s"${tablePrefix}_rank", "shingle", buckets, p("_rank"), pc),
-      () => ScaleOps.writeBucketed(shingleSharded(pref),
-        s"${tablePrefix}_pref", "shingle", buckets, p("_pref"), pc),
-      () => ScaleOps.writeBucketed(shOut,
-        s"${tablePrefix}_sh", idCol, buckets, p("_sh"), pc),
-      () => {
-        // the build contract rides WITH the index (1-row sidecar) so
-        // the reader/append paths can reject a mismatched call instead
-        // of silently losing pairs (a τ' < τ_build read is lossy by
-        // construction — stored prefixes are too short for it)
-        import sp.implicits._
-        val mw = Seq((threshold, shingleN, buckets, shardBy))
-          .toDF("tau_build", "shingle_n", "buckets", "shard_by")
-          .coalesce(1).write.mode("overwrite").format("parquet")
-        p("_meta").fold(mw.saveAsTable(s"${tablePrefix}_meta"))(pp =>
-          mw.option("path", pp).saveAsTable(s"${tablePrefix}_meta"))
-      })
-  }
-
-  /** Read the 1-row `_meta` sidecar written by [[writePrefixIndex]]:
-    * (tau_build, shingle_n, buckets, shard_by).
-    */
-  private def readIndexMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): (Double, Int, Int, Int) = {
-    val r = spark.table(s"${tablePrefix}_meta").collect().head
-    (r.getDouble(r.fieldIndex("tau_build")),
-      r.getInt(r.fieldIndex("shingle_n")),
-      r.getInt(r.fieldIndex("buckets")),
-      r.getInt(r.fieldIndex("shard_by")))
+      () => idx.write(ranked, "rank", "shingle"),
+      () => idx.write(pref, "pref", "shingle"),
+      () => idx.write(sh.select(col(idCol), col("shingle")), "sh", idCol),
+      () => idx.writeMeta())
   }
 
   /** Nightly-incremental PPJoin against a standing-corpus index
@@ -1258,16 +1202,8 @@ object TextDedup {
       s"threshold in (0, 1], got $threshold")
     require(maxPrefixPosting > 0,
       s"maxPrefixPosting must be positive, got $maxPrefixPosting")
-    val (tauBuild, shNBuild, _, shardBy) =
-      readIndexMeta(spark, tablePrefix)
-    require(threshold >= tauBuild,
-      s"prefixJaccardAgainstIndexed: threshold $threshold < the " +
-        s"index's build threshold $tauBuild — stored prefixes are cut " +
-        "at the build τ and a looser read would silently lose pairs; " +
-        "rebuild the index at the looser τ")
-    require(shingleN == shNBuild,
-      s"prefixJaccardAgainstIndexed: shingleN $shingleN does not " +
-        s"match the index's build shingleN $shNBuild")
+    val idx = StandingIndex.forRead(spark, tablePrefix,
+      "prefixJaccardAgainstIndexed", threshold, shingleN)
     val bsh = CacheHandle.persistWith(handle,
       shingles(batch, idCol, textCol, shingleN))
     // no standalone bsh.count: the first sequential action over bpref
@@ -1275,80 +1211,45 @@ object TextDedup {
     // and fills the cache before the verify side reads it
     // (sharded builds fill it even earlier, at the shard-set collect)
     // shard pruning (sharded builds only): a rank/prefix row outside
-    // tonight's batch shard set cannot match any batch shingle, so
-    // filtering on the partition column prunes whole corpus
-    // directories before a byte is read. The shard-set collect is
-    // bounded by shardBy (a build-time literal), the bounded-by-
-    // construction collect rule.
-    val shards: Seq[Int] =
-      if (shardBy <= 0) Nil
-      else bsh
-        .select(pmod(hash(col("shingle")), lit(shardBy)).as("__shard"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-    def pruned(t: DataFrame): DataFrame =
-      if (shardBy <= 0) t
-      else t.filter(col("__shard").isin(shards: _*)).drop("__shard")
-    val rank = pruned(spark.table(s"${tablePrefix}_rank"))
-    val cpref = pruned(spark.table(s"${tablePrefix}_pref"))
+    // tonight's batch shard set cannot match any batch shingle
+    val shards = idx.shardsOf("shingle", bsh)
+    val rank = idx.read("rank", shards)
+    val cpref = idx.read("pref", shards)
     val bpref = CacheHandle.persistWith(handle,
       frozenOrderPrefix(rank, bsh, idCol, threshold))
-    if (maxPrefixPosting == Int.MaxValue)
-      bpref.count() // eager: candidate join + audit would race it
-    else {
-      // the BATCH factor of the cross fan-out; collect doubles as
-      // materializer
-      val worst = overCapBuckets(bpref, Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(worst.isEmpty, {
-        val r = worst.head
-        s"prefixJaccardAgainstIndexed: batch prefix posting for " +
-          s"shingle '${r.getString(0)}' has ${r.getLong(1)} members " +
-          s"(> maxPrefixPosting=$maxPrefixPosting) — the cross " +
-          "candidate join would fan out on it; raise the bound if " +
-          "the fan-out is affordable"
-      })
+    // the BATCH factor of the cross fan-out; the audit (or its count,
+    // unbounded) materializes bpref before the candidate join reads it
+    auditShinglePostings(bpref, maxPrefixPosting) { (s, n) =>
+      s"prefixJaccardAgainstIndexed: batch prefix posting for shingle " +
+        s"'$s' has $n members (> maxPrefixPosting=$maxPrefixPosting) — " +
+        "the cross candidate join would fan out on it; raise the bound " +
+        "if the fan-out is affordable"
+    }
+    // the corpus prefix postings tonight's batch touches. Left-semi
+    // keyed on the bucket key: zero corpus exchange, batch-sized output.
+    val touched = cpref.join(bpref.select("shingle").distinct(),
+      Seq("shingle"), "left_semi")
+    if (maxPrefixPosting != Int.MaxValue)
       // the CORPUS factor, restricted to what tonight actually
       // touches: the build-time audit covered the freshly-built
       // postings, but appendPrefixIndex grows them under a frozen
       // rank — without this, a run of appends fans the candidate
-      // join out with no tripwire. Left-semi keyed on the bucket key:
-      // zero corpus exchange, batch-sized output.
-      val cworst = overCapBuckets(
-          cpref.join(bpref.select("shingle").distinct(),
-            Seq("shingle"), "left_semi"),
-          Seq("shingle"), maxPrefixPosting)
-        .orderBy(col("n_members").desc, col("shingle"))
-        .limit(1).collect()
-      require(cworst.isEmpty, {
-        val r = cworst.head
+      // join out with no tripwire
+      auditShinglePostings(touched, maxPrefixPosting) { (s, n) =>
         s"prefixJaccardAgainstIndexed: corpus prefix posting for " +
-          s"batch-touched shingle '${r.getString(0)}' has " +
-          s"${r.getLong(1)} members (> maxPrefixPosting=" +
-          s"$maxPrefixPosting) — appends have grown it past the " +
-          "build-time audit; rebuild the index (one writePrefixIndex) " +
-          "or raise the bound if the fan-out is affordable"
-      })
-    }
+          s"batch-touched shingle '$s' has $n members (> " +
+          s"maxPrefixPosting=$maxPrefixPosting) — appends have grown it " +
+          "past the build-time audit; rebuild the index (one " +
+          "writePrefixIndex) or raise the bound if the fan-out is " +
+          "affordable"
+      }
     // verify-side pruning (sharded builds only): every candidate
     // corpus id comes from a batch-touched prefix posting, so the
-    // candidate ID shard set is derivable BEFORE the candidate join —
-    // one keyed semi-lookup into the (already shard-pruned) `_pref`
-    // table, collected bounded by shardBy. `_sh` directories outside
-    // it can hold no candidate's postings; pruning them makes the
-    // verify scan track the candidate footprint, not the corpus.
-    val csh = {
-      val t = spark.table(s"${tablePrefix}_sh")
-      if (shardBy <= 0) t
-      else {
-        val idShards = cpref
-          .join(bpref.select("shingle").distinct(),
-            Seq("shingle"), "left_semi")
-          .select(pmod(hash(col(idCol)), lit(shardBy)).as("__s"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        t.filter(col("__shard").isin(idShards: _*)).drop("__shard")
-      }
-    }
+    // candidate ID shard set is derivable BEFORE the candidate join.
+    // `_sh` directories outside it can hold no candidate's postings;
+    // pruning them makes the verify scan track the candidate
+    // footprint, not the corpus.
+    val csh = idx.read("sh", idx.shardsOf(idCol, touched))
     // candidate join: batch prefix postings against the bucketed
     // corpus prefix postings — corpus side zero-exchange; sizes ride
     // along (functionally determined by the ids) so verification
@@ -1418,56 +1319,22 @@ object TextDedup {
       handle: CacheHandle = null): Unit = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0, 1], got $threshold")
-    val (tauBuild, shNBuild, bkBuild, shardBy) =
-      readIndexMeta(spark, tablePrefix)
-    require(threshold == tauBuild,
-      s"appendPrefixIndex: threshold $threshold != the index's build " +
-        s"threshold $tauBuild — appended prefixes must be cut exactly " +
-        "like the stored ones or readers between the two τs silently " +
-        "lose pairs")
-    require(shingleN == shNBuild,
-      s"appendPrefixIndex: shingleN $shingleN does not match the " +
-        s"index's build shingleN $shNBuild")
-    require(buckets == bkBuild,
-      s"appendPrefixIndex: buckets $buckets does not match the " +
-        s"index's build buckets $bkBuild")
+    val idx = StandingIndex.forAppend(spark, tablePrefix,
+      "appendPrefixIndex", threshold, shingleN, buckets)
     val bsh = CacheHandle.persistWith(handle,
       shingles(batch, idCol, textCol, shingleN))
     bsh.count() // eager: the two appends below run CONCURRENTLY and
     // would otherwise race the lazy cache (the q_pca_power rule)
     // sharded builds: the rank lookup only needs the batch's shards
     // (a rank row elsewhere cannot match a batch shingle)
-    val rank =
-      if (shardBy <= 0) spark.table(s"${tablePrefix}_rank")
-      else {
-        val shards = bsh
-          .select(pmod(hash(col("shingle")), lit(shardBy)).as("__shard"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        spark.table(s"${tablePrefix}_rank")
-          .filter(col("__shard").isin(shards: _*)).drop("__shard")
-      }
+    val rank = idx.read("rank", idx.shardsOf("shingle", bsh))
     val newPref = frozenOrderPrefix(rank, bsh, idCol, threshold)
       .select(col("shingle"), col(idCol), col("sz"))
-    // sharded builds: appended rows land in their shingle's shard
-    // directory (same hash as the build) so the reader's pruning
-    // stays exact across appends
-    val (prefOut, pc) =
-      if (shardBy > 0)
-        (newPref.withColumn("__shard",
-          pmod(hash(col("shingle")), lit(shardBy))), Some("__shard"))
-      else (newPref, None)
-    val shOut =
-      if (shardBy > 0)
-        bsh.select(col(idCol), col("shingle"))
-          .withColumn("__shard", pmod(hash(col(idCol)), lit(shardBy)))
-      else bsh.select(col(idCol), col("shingle"))
     // the two appends target distinct tables neither reads (guide
     // §2.6): overlap them
     ScaleOps.concurrently(
-      () => ScaleOps.appendBucketed(prefOut,
-        s"${tablePrefix}_pref", "shingle", buckets, pc),
-      () => ScaleOps.appendBucketed(shOut,
-        s"${tablePrefix}_sh", idCol, buckets, pc))
+      () => idx.append(newPref, "pref", "shingle"),
+      () => idx.append(bsh.select(col(idCol), col("shingle")), "sh", idCol))
   }
 
   /** Batch-side prefix frame under a FROZEN index order (shared by

@@ -759,8 +759,8 @@ object AnalyticsQueries {
     // every run. Bucketing is layout-only, so the oracle is the plain
     // join over the raw tables; money exits as BIGINT cents.
     "q_bucketed_join" -> ((s, dir) => {
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val (liT, oT) = (s"graft_li_bk_$app", s"graft_o_bk_$app")
+      val (liT, oT) = (Tables.scratchTable(s, "graft_li_bk"),
+        Tables.scratchTable(s, "graft_o_bk"))
       graft.ops.ScaleOps.writeBucketed(
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice")),

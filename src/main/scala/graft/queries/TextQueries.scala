@@ -284,8 +284,7 @@ object TextQueries {
     "q_prefix_jaccard_incr_idx" -> ((s, dir) => {
       graft.ops.ScaleOps.byteSizedAqe(s) // query-scoped bytes-based AQE
       val d = docs(s, dir)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val tp = s"graft_ppjidx_$app"
+      val tp = Tables.scratchTable(s, "graft_ppjidx")
       TextDedup.writePrefixIndex(d.filter(col("doc_id") < 250),
         "doc_id", "text", tp, buckets = 8, shingleN = 3, threshold = 0.8,
         pathPrefix = Some(Tables.scratchDir(s, tp).toString),
@@ -309,8 +308,7 @@ object TextQueries {
     "q_prefix_jaccard_incr_append" -> ((s, dir) => {
       graft.ops.ScaleOps.byteSizedAqe(s) // query-scoped bytes-based AQE
       val d = docs(s, dir)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val tp = s"graft_ppjapp_$app"
+      val tp = Tables.scratchTable(s, "graft_ppjapp")
       TextDedup.writePrefixIndex(d.filter(col("doc_id") < 150),
         "doc_id", "text", tp, buckets = 8, shingleN = 3, threshold = 0.8,
         pathPrefix = Some(Tables.scratchDir(s, tp).toString),
@@ -343,9 +341,8 @@ object TextQueries {
       val d = docs(s, dir)
       val corpus = d.filter(col("doc_id") < 250)
       val batch = d.filter(col("doc_id") >= 250)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val fpT = s"graft_night_fp_$app"
-      val tp = s"graft_night_ppj_$app"
+      val fpT = Tables.scratchTable(s, "graft_night_fp")
+      val tp = Tables.scratchTable(s, "graft_night_ppj")
       // standing-side artifacts: built once per corpus rebuild in
       // production, here inside the query (rerun-safe via overwrite).
       // The two builds and the batch gate are INDEPENDENT — overlap
@@ -425,9 +422,8 @@ object TextQueries {
       val corpus = d.filter(col("doc_id") < 250)
       val b1 = d.filter(col("doc_id") >= 250 && col("doc_id") < 375)
       val b2 = d.filter(col("doc_id") >= 375)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val fpT = s"graft_n2_fp_$app"
-      val tp = s"graft_n2_ppj_$app"
+      val fpT = Tables.scratchTable(s, "graft_n2_fp")
+      val tp = Tables.scratchTable(s, "graft_n2_ppj")
       // the two standing-side builds are independent — overlap them
       // (guide §2.6)
       graft.ops.ScaleOps.concurrently(
@@ -525,9 +521,8 @@ object TextQueries {
       val d = docs(s, dir)
       val corpus = d.filter(col("doc_id") < 250)
       val batch = d.filter(col("doc_id") >= 250)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val fpT = s"graft_nightc_fp_$app"
-      val tp = s"graft_nightc_cos_$app"
+      val fpT = Tables.scratchTable(s, "graft_nightc_fp")
+      val tp = Tables.scratchTable(s, "graft_nightc_cos")
       // the two standing-side builds and the batch gate are
       // INDEPENDENT — overlap them (guide §2.6); stage frames are
       // EAGER localCheckpoints, not persists (the q_pipeline_nightly
@@ -657,8 +652,7 @@ object TextQueries {
     "q_cosine_incr_idx" -> ((s, dir) => {
       graft.ops.ScaleOps.byteSizedAqe(s) // query-scoped bytes-based AQE
       val d = docs(s, dir)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val tp = s"graft_cosidx_$app"
+      val tp = Tables.scratchTable(s, "graft_cosidx")
       graft.ops.CosineAllPairs.writeIndex(d.filter(col("doc_id") < 250),
         "doc_id", "text", tp, buckets = 8, shingleN = 3, threshold = 0.8,
         pathPrefix = Some(Tables.scratchDir(s, tp).toString),
@@ -680,8 +674,7 @@ object TextQueries {
     "q_cosine_incr_append" -> ((s, dir) => {
       graft.ops.ScaleOps.byteSizedAqe(s) // query-scoped bytes-based AQE
       val d = docs(s, dir)
-      val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val tp = s"graft_cosapp_$app"
+      val tp = Tables.scratchTable(s, "graft_cosapp")
       graft.ops.CosineAllPairs.writeIndex(d.filter(col("doc_id") < 150),
         "doc_id", "text", tp, buckets = 8, shingleN = 3, threshold = 0.8,
         pathPrefix = Some(Tables.scratchDir(s, tp).toString),

@@ -35,38 +35,17 @@ import graft.model.SheetMatrix
   */
 object XlsxDataSource {
 
-  /** Spark passes multi-path loads as a JSON string array. A naive
-    * split(",") mis-split any path CONTAINING a comma and never
-    * unescaped backslash sequences — parse the array properly
-    * (strings, escapes, separators; nothing else appears in it).
+  // thread-safe once configured; one per JVM keeps its deserializer
+  // cache across calls
+  private val pathsJson = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Spark passes multi-path loads as a JSON string array (written
+    * with Jackson). A naive split(",") mis-split any path CONTAINING
+    * a comma and never unescaped backslash sequences — read it back
+    * with the same library.
     */
-  def parsePathsJson(json: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (inStr) c match {
-        case '\\' if i + 1 < json.length =>
-          json.charAt(i + 1) match {
-            case 'n' => cur.append('\n'); case 't' => cur.append('\t')
-            case 'r' => cur.append('\r'); case 'b' => cur.append('\b')
-            case 'f' => cur.append('\f')
-            case 'u' if i + 5 < json.length =>
-              cur.append(Integer.parseInt(
-                json.substring(i + 2, i + 6), 16).toChar)
-              i += 4
-            case e => cur.append(e) // \" \\ \/ and anything literal
-          }
-          i += 1
-        case '"' => inStr = false; out += cur.result(); cur.clear()
-        case ch => cur.append(ch)
-      } else if (c == '"') inStr = true
-      i += 1
-    }
-    out.result()
-  }
+  def parsePathsJson(json: String): Seq[String] =
+    pathsJson.readValue(json, classOf[Array[String]]).toSeq
 
   /** Expand directory paths to the workbooks inside (sorted,
     * case-insensitive .xlsx) — the documented fan-out unit: one

@@ -81,4 +81,17 @@ class BenchTripwireSpec extends AnyFunSuite {
     assert(within == 2) // q_b, and q_d (2.2/2.0 is exactly double 1.1)
     assert(slower == 1) // q_c (1.11 > 1.1)
   }
+
+  test("deltaCounts: a failed query's time-to-crash is in no speed class") {
+    val b = Map("q_a" -> 1.0, "q_b" -> 1.0, "q_c" -> 1.0)
+    // q_a crashed after 0.1 s, q_b after 5 s: neither is a speed
+    val (common, faster, within, slower) = Bench.deltaCounts(
+      Seq("q_a" -> 0.1, "q_b" -> 5.0, "q_c" -> 1.0), b,
+      failed = Set("q_a", "q_b"))
+    assert(common == 3)
+    assert(faster == 0, "a crash was classed as faster")
+    assert(within == 1) // q_c
+    assert(slower == 0, "a crash was classed as slower")
+    assert(common - faster - within - slower == 2) // the failed count
+  }
 }

@@ -484,6 +484,24 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(passed.size <= members.size + 25)
   }
 
+  test("byteSizedAqe keeps its partition floor once a shuffle passes 1 MB per partition") {
+    // bytes-based sizing alone coalesces any shuffle under the 64 MB
+    // advisory size to ONE partition; the floor byteSizedAqe sets
+    // through coalescePartitions.minPartitionNum (deprecated in Spark
+    // 4, still read) caps the target at shuffle bytes / max(2,
+    // cores/4). Spark never cuts below minPartitionSize (1 MB), so the
+    // frame shuffles ~13 MB of incompressible hex for the floor to
+    // bind. A Spark that drops the key fails here instead of silently
+    // serializing the opted-in queries.
+    try {
+      ScaleOps.byteSizedAqe(spark)
+      val wide = spark.range(0, 200000)
+        .select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+        .repartition(col("id"))
+      assert(wide.rdd.getNumPartitions >= 2)
+    } finally graft.ops.QueryCaches.releaseAll()
+  }
+
   test("bloomBuild validates its geometry") {
     import spark.implicits._
     val df = Seq(1L).toDF("k")
