@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Rows exceeding the regression gate vs the committed baseline:
     * >2x the baseline AND >1 s absolute growth, worst absolute growth
@@ -56,157 +56,100 @@ object Bench {
     (folded, regressions(folded, base))
   }
 
+  /** First number in a /proc file, -1 when unreadable. */
+  private def procFirst(path: String): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+      .split("\\s+")(0).toDouble
+    catch { case scala.util.control.NonFatal(_) => -1.0 }
+
+  /** The host's 1-min load average, -1 when unreadable. Bench stamps
+    * it into its report at start and end; ScaleSweep refuses to run
+    * past [[maxStartLoad]].
+    */
+  def loadAvg(): Double = procFirst("/proc/loadavg")
+
+  /** The start-load bound of every timing harness. The start load is
+    * read AFTER sbt/JVM startup (the earliest point main can read),
+    * which alone lifts the 1-min figure past 2–3 on a 4-core host even
+    * from idle — a tighter bound flags every clean run; a genuinely
+    * contended full bench started at 4.15.
+    */
+  val maxStartLoad = 4.0
+
+  /** Every name a Bench run can select: the declared queries plus the
+    * [[StressProxies]] rows.
+    */
+  def runnable: Set[String] =
+    SparkEntry.queries.keySet ++ StressProxies.queries.map(_._1)
+
+  /** The one timed run step of every Bench row (declared pass, proxy
+    * pass, retime): build `fn`'s frame, write it to the noop sink,
+    * then release its caches so they neither accumulate nor carry one
+    * query's work into another's timing. Returns the elapsed seconds
+    * (the release excluded) and whether the run succeeded; a failed
+    * run's time is its time-to-crash.
+    *
+    * noop sink, not count(): count() lets Catalyst prune final sorts
+    * and unreferenced projections, timing projection-heavy queries as
+    * near-no-ops — the noop writer evaluates every output row fully.
+    */
+  def runStep(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Boolean) =
+    graft.ops.QueryCaches.scoped(spark) {
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          false
+        }
+      ((System.nanoTime() - t0) / 1e9, ok)
+    }
+
   def main(args: Array[String]): Unit = {
+    // optional focus filter for local perf triage: comma-separated
+    // names; proxies run only when listed (or when unset). An unknown
+    // name fails before the session starts.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map { spec =>
+      SparkEntry.select(spec, runnable) match {
+        case Right(ns) => ns
+        case Left(msg) => System.err.println(msg); sys.exit(2)
+      }
+    }
+    def selected(name: String): Boolean = only.forall(_.contains(name))
     // the artifact names its own contention: host load at run start
     // and end + uptime, so a judge can adjudicate a driver rerun
     // under load without a local re-run (three rounds of tripwire
     // false alarms were all host contention)
-    def procFirst(path: String): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-        .split("\\s+")(0).toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val loadStart = procFirst("/proc/loadavg")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session before timing: parquet footers, codegen
-    // framework, shuffle machinery. Steady-state cost is what a
-    // long-running cluster job sees; without this the first queries
-    // absorb ~10 s of one-time JVM/Spark initialization.
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n).limit(1).count()
-      catch { case _: Throwable => () }
-    }
-    try {
-      import org.apache.spark.sql.functions._
-      Tables.table(spark, sfDir, "lineitem")
-        .groupBy("l_returnflag").agg(count(lit(1))).count()
-    } catch { case _: Throwable => () }
-    // two passes, keep the per-query minimum: local runs are noisy
-    // (GC, codegen churn); min-of-2 is the steady-state figure.
-    // noop sink (not count): count() lets Catalyst prune final sorts
-    // and unreferenced projections, timing projection-heavy queries as
-    // near-no-ops — the noop writer evaluates every output row fully.
-    // optional focus filter for local perf triage (the driver never
-    // sets it): comma-separated names; proxies run only when listed
-    // (or when unset)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
+    val loadStart = loadAvg()
+    val sfDir = Tables.sfDir
+    val spark = GraftSession.local()
+    Tables.warm(spark, sfDir)
     // a failed query's elapsed time is its time-to-crash — recorded
     // (timing semantics frozen) but NAMED in the report: r9-r10 shipped
     // q_adamic_adar's sf0.1 crash as a plausible-looking 2 s row for
     // two rounds because the FAILED line only ever reached stderr,
     // outside the driver's stdout tail capture
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def pass(): Map[String, Double] = SparkEntry.queries
-      .filter { case (name, _) => selected(name) }
-      .map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          failed += name
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop persisted subplans so caches neither accumulate nor
-        // carry one query's work into another's timing
-        graft.ops.QueryCaches.releaseAll()
-        spark.catalog.clearCache()
-        name -> dt
+    def measure(name: String,
+        fn: (SparkSession, String) => DataFrame): Double = {
+      val (dt, ok) = runStep(spark, sfDir, name, fn)
+      if (!ok) failed += name
+      dt
     }
+    // two passes over the declared queries, then each proxy twice in
+    // turn; keep the per-query minimum: local runs are noisy (GC,
+    // codegen churn); min-of-2 is the steady-state figure.
+    val declared = SparkEntry.queries.filter { case (name, _) => selected(name) }
+    def pass(): Map[String, Double] =
+      declared.map { case (name, fn) => name -> measure(name, fn) }
     val p1 = pass()
     val p2 = pass()
-    // scale proxy, recorded numerically each round (bench-only — not a
-    // declared gate query): 16 shifted copies of a capped documents
-    // slice through the full minhash → band-join → verify pipeline.
-    // Every doc becomes a 16-member exact-dup family, the worst case
-    // for LSH bucket skew — the figure tracks whether the bucketed
-    // plan's cost stays ~linear in corpus size round over round (the
-    // TextDedupSpec 16x stress pins the plan SHAPE; this pins the
-    // NUMBER).
-    def proxyPass(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        StressProxies.minhashFamily(spark, sfDir, 16)
-          .write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] q_dedup_minhash_16x FAILED: ${e.getMessage}")
-        failed += "q_dedup_minhash_16x"
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
-      dt
-    }
-    val proxy =
-      if (selected("q_dedup_minhash_16x")) math.min(proxyPass(), proxyPass())
-      else -1.0
-    // vector-side twin of the 16x proxy: 16 shifted copies of the
-    // embeddings table through the LSH pair miner — every vector gains
-    // 15 exact duplicates, the worst case for sign-bucket collisions;
-    // tracks whether the bucket-local equi-join stays ~linear as the
-    // vector corpus multiplies.
-    def annProxyPass(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        StressProxies.lshPairsFamily(spark, sfDir, 16)
-          .write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] q_ann_lsh_16x FAILED: ${e.getMessage}")
-        failed += "q_ann_lsh_16x"
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
-      dt
-    }
-    val annProxy =
-      if (selected("q_ann_lsh_16x")) math.min(annProxyPass(), annProxyPass())
-      else -1.0
-    // graph-side stress proxy: the one scale hazard the 16x self-union
-    // proxies don't exercise is DEGREE SKEW — a few 10³–10⁴-degree hub
-    // keys on a bipartite fold. Synthetic (sf-independent, fully
-    // deterministic from spark.range): three bands — 25k light keys
-    // (degree 8), 200 heavy-but-capped keys (degree 60, just under the
-    // cap: the real fan-out cost, ~354k pairs from 12k rows), and 4
-    // over-cap hubs (degree 4000 each) that the audited anti-join must
-    // drop BEFORE the quadratic pair stage (uncapped they alone would
-    // be 32M pairs). The resulting ~1M edges then drive pageRank — the
-    // whole capped-fold + rank path whose cost under skew was
-    // previously asserted, never measured.
-    def graphHubPass(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        // the over-cap require (exactly 4 hubs at m=1) lives in the
-        // shared body — a silent no-drop would time an
-        // uncapped-equivalent plan
-        StressProxies.graphHubFamily(spark, m = 1)
-          .write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] q_graph_hub FAILED: ${e.getMessage}")
-        failed += "q_graph_hub"
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
-      dt
-    }
-    val graphHubProxy =
-      if (selected("q_graph_hub")) math.min(graphHubPass(), graphHubPass())
-      else -1.0
+    val proxies = StressProxies.queries
+      .filter { case (name, _) => selected(name) }
+      .map { case (name, fn) => name -> math.min(measure(name, fn), measure(name, fn)) }
     val measured: Map[String, Double] =
-      p1.map { case (k, v) => k -> math.min(v, p2(k)) } ++
-        (if (proxy >= 0) Seq("q_dedup_minhash_16x" -> proxy) else Nil) ++
-        (if (annProxy >= 0) Seq("q_ann_lsh_16x" -> annProxy) else Nil) ++
-        (if (graphHubProxy >= 0) Seq("q_graph_hub" -> graphHubProxy) else Nil)
+      p1.map { case (k, v) => k -> math.min(v, p2(k)) } ++ proxies
     // Locale.ROOT: JVM-default-locale %.3f would print "0,169" under a
     // comma-decimal locale and break the JSON report
     def s3(v: Double): String =
@@ -228,61 +171,28 @@ object Bench {
         Some(qre.findAllMatchIn(java.nio.file.Files.readString(basePath))
           .map(m => m.group(1) -> m.group(2).toDouble).toMap)
       } else None
-    def retime(name: String): Double = name match {
-      // the proxy passes swallow their own exceptions (recording the
-      // name in `failed`) and return elapsed time-to-crash — which
-      // must not clear a flagged regression any more than a declared
-      // query's crash does. Detect a failure by the ledger growing,
-      // then restore the ledger to its pre-retime state exactly: the
-      // stdout/artifact failed lines are emitted AFTER this pass and
-      // must reflect the MEASURED passes, not a flaky retime.
-      case "q_dedup_minhash_16x" | "q_ann_lsh_16x" | "q_graph_hub" =>
-        val hadFailed = failed.remove(name)
-        val dt = name match {
-          case "q_dedup_minhash_16x" => proxyPass()
-          case "q_ann_lsh_16x"       => annProxyPass()
-          case _                     => graphHubPass()
-        }
-        val crashed = failed.remove(name)
-        if (hadFailed) failed.add(name)
-        if (crashed) {
-          System.err.println(s"[bench] $name RETIME FAILED")
-          Double.MaxValue
-        } else dt
-      case _ => SparkEntry.queries.get(name).map { fn =>
-        val t0 = System.nanoTime()
-        // a failed re-time must NOT clear a flagged regression: the
-        // elapsed time of a crash is short, and min(v, crash-time)
-        // would silently clear a genuinely broken query. Surface it and
-        // keep the original (flagged) measurement.
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name RETIME FAILED: ${e.getClass.getSimpleName}")
-              false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.ops.QueryCaches.releaseAll()
-        spark.catalog.clearCache()
+    // Double.MaxValue keeps the flagged measurement. A failed re-time
+    // must NOT clear a flagged regression: the elapsed time of a crash
+    // is short, and min(v, crash-time) would silently clear a genuinely
+    // broken query. A query whose MEASURED passes crashed is not
+    // re-timed: a lucky success would clear the tripwire and publish a
+    // success-run duration while `failed` still names the query.
+    val everyRow = SparkEntry.queries ++ StressProxies.queries
+    def retime(name: String): Double =
+      if (failed.contains(name)) Double.MaxValue
+      else everyRow.get(name).fold(Double.MaxValue) { fn =>
+        val (dt, ok) = runStep(spark, sfDir, name, fn)
+        if (!ok) System.err.println(s"[bench] $name RETIME FAILED")
         if (ok) dt else Double.MaxValue
-      }.getOrElse(Double.MaxValue)
-    }
-    // a query whose MEASURED passes crashed must keep its flagged
-    // time-to-crash: a lucky successful retime would both clear the
-    // tripwire and publish a success-run duration while `failed`
-    // still names the query — the artifact-self-contradiction class
-    // in the value-provenance dimension
-    def retimeGuarded(name: String): Double =
-      if (failed.contains(name)) Double.MaxValue else retime(name)
+      }
     val (results, regressedOpt) = baseOpt match {
       case Some(base) =>
-        val (folded, rows) = foldRetimes(measured, base, retimeGuarded)
+        val (folded, rows) = foldRetimes(measured, base, retime)
         (folded, Some(rows))
       case None => (measured, None)
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val loadEnd = procFirst("/proc/loadavg")
+    val loadEnd = loadAvg()
     val upSec = procFirst("/proc/uptime")
     // per-query analogue of the loud file-level NO_BASELINE: queries
     // the tripwire silently cannot judge (absent from the committed
@@ -301,12 +211,6 @@ object Bench {
     // round), so the flag rides in both the stdout report line and
     // bench_full.json; the baseline-refresh rule already ignores
     // contended runs ("the BEST clean full-suite run").
-    // 4.0 = the ScaleSweep threshold: loadStart is read AFTER sbt/JVM
-    // startup (the earliest point main can read), which alone lifts
-    // the 1-min figure past 2–3 on this host even from idle — a
-    // tighter bound flags every clean run; r16's genuinely-contended
-    // driver run started at 4.15
-    val maxStartLoad = 4.0
     val contended = loadStart > maxStartLoad
     val loadJson = noBase +
       s""""load":[${s3(loadStart)},${s3(loadEnd)}],"up":${s3(upSec)}""" +

@@ -43,9 +43,11 @@ object GraftSession {
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.ui.enabled", "false")
 
-  /** Local session for tests/tools. `cpus` threads, shuffle partitions
-    * sized to match (not the 200 default, which just fragments local
-    * runs; on a real cluster this is set per-job to ~2-3× total cores).
+  /** Local session for every harness (Verify, Bench, the tools, the
+    * specs). `cpus` threads, `SPARK_GRAFT_CPUS` or 4 when unset;
+    * shuffle partitions sized to match (not the 200 default, which
+    * just fragments local runs; on a real cluster this is set per-job
+    * to ~2-3× total cores).
     */
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
     val spark = configure(

@@ -49,6 +49,22 @@ object SparkEntry {
       graft.queries.MediaQueries.queries ++
       graft.queries.StreamQueries.queries
 
+  /** Parse a comma-separated query selection (trimmed, empties
+    * dropped) and check it against `known`. A name that matches
+    * nothing must fail, not silently shrink the run: a typo'd
+    * selection would otherwise print a clean-looking report over the
+    * query that never ran. Left carries the message naming the
+    * unknown names.
+    */
+  def select(spec: String,
+      known: collection.Set[String]): Either[String, Set[String]] = {
+    val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- known
+    if (unknown.isEmpty) Right(names)
+    else Left(s"unknown quer${if (unknown.size == 1) "y" else "ies"} in " +
+      s"selection: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = {

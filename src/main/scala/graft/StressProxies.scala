@@ -5,19 +5,37 @@ import org.apache.spark.sql.functions._
 
 /** The scale stress-family pipelines, shared verbatim between the two
   * harnesses that time them: [[Bench]] pins each family at ONE size
-  * every round (the q_dedup_minhash_16x / q_ann_lsh_16x / q_graph_hub
-  * rows), and [[graft.tools.ScaleSweep]] measures the same plans over
-  * a 1×/2×/4×/8× multiplier ladder into `docs/SCALING.md`. One body
-  * per family — a pipeline change (a different band count, a new cos
-  * threshold) moves the point and the curve TOGETHER; two copies
-  * would silently desynchronize the exponent from the plan the bench
-  * actually pins.
+  * on every run (the [[queries]] rows), and [[graft.tools.ScaleSweep]]
+  * measures the same plans over a 1×/2×/4×/8× multiplier ladder into
+  * `docs/SCALING.md`. One body per family — a pipeline change (a
+  * different band count, a new cos threshold) moves the point and the
+  * curve TOGETHER; two copies would silently desynchronize the
+  * exponent from the plan the bench actually pins.
   *
   * Each builder returns the final frame; the caller owns the action,
-  * timing, and cache release (`QueryCaches.releaseAll()` — the
-  * internal persists ride the session ledger).
+  * timing, and cache release (`QueryCaches.scoped` — the internal
+  * persists ride the session ledger).
   */
 object StressProxies {
+
+  /** The bench-only proxy rows, in run order, in the
+    * [[SparkEntry.queries]] shape. Not declared queries: they have no
+    * oracle, so Verify never runs them.
+    */
+  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    // does the bucketed MinHash plan's cost stay ~linear in corpus size
+    // (the TextDedupSpec 16x stress pins the plan SHAPE; this pins the
+    // NUMBER)
+    ("q_dedup_minhash_16x", (spark, sfDir) => minhashFamily(spark, sfDir, 16)),
+    // vector-side twin: does the bucket-local equi-join stay ~linear as
+    // the vector corpus multiplies
+    ("q_ann_lsh_16x", (spark, sfDir) => lshPairsFamily(spark, sfDir, 16)),
+    // the one scale hazard the 16x self-union proxies don't exercise is
+    // DEGREE SKEW: 4 over-cap hubs (uncapped they alone would be 32M
+    // pairs) beside ~354k real pairs, then pageRank over the ~1M
+    // surviving edges — the capped-fold + rank path whose cost under
+    // skew is otherwise asserted, never measured. Sf-independent.
+    ("q_graph_hub", (spark, _) => graphHubFamily(spark, m = 1)))
 
   /** m shifted copies of a bounded documents slice through the full
     * MinHash → band-join → verify pipeline: every doc becomes an

@@ -16,6 +16,28 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The tables directory the timing and triage tools read:
+    * `SPARK_GRAFT_SF_DIR`, sf0.1 when unset.
+    */
+  def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Warm a session before timing: parquet footers, the codegen
+    * framework, shuffle machinery. Steady-state cost is what a
+    * long-running cluster job sees; without this the first queries
+    * absorb ~10 s of one-time JVM/Spark initialization. A missing
+    * table is skipped.
+    */
+  def warm(spark: SparkSession, dir: String): Unit = {
+    names.foreach { n =>
+      try table(spark, dir, n).limit(1).count()
+      catch { case _: Throwable => () }
+    }
+    try table(spark, dir, "lineitem")
+      .groupBy("l_returnflag").agg(count(lit(1))).count()
+    catch { case _: Throwable => () }
+  }
+
   /** Normalize a raw `events`-shaped frame (batch or streaming) to the
     * engine's canonical event-time columns, whatever the physical `ts`
     * type of the data generation:

@@ -88,11 +88,7 @@ object Verify {
     // re-check (the driver always runs the full surface with 2 args)
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
-      // trim + drop empties (the Bench SPARK_GRAFT_BENCH_ONLY idiom):
-      // "q_a, q_b" must select q_b, not silently run one query while
-      // the manifest hides the other from the checker
-      case Array(s, o, f) =>
-        (s, o, Some(f.split(',').map(_.trim).filter(_.nonEmpty).toSet))
+      case Array(s, o, f) => (s, o, Some(f))
       case _ =>
         System.err.println(
           "usage: graft.Verify <sfDir> <outDir> [q_a,q_b,...]")
@@ -112,24 +108,15 @@ object Verify {
     // silently shrink the checked surface (the round-7 vanished-query
     // class at the selection layer: a typo'd re-check printed green
     // over the query that was never run)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"unknown quer${if (unknown.size == 1) "y" else "ies"} in " +
-            s"selection: ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
+    val names = only.map { spec =>
+      SparkEntry.select(spec, SparkEntry.queries.keySet) match {
+        case Right(ns) => ns
+        case Left(msg) => System.err.println(msg); sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => names.forall(_.contains(name)) }
     // the manifest is written BEFORE the loop (as is oracle_sql.json
     // below — moved ahead of the loop in spirit by the manifest): if
     // the loop aborts, the checker sees which queries were ATTEMPTED
@@ -168,14 +155,11 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
     writeOracle()
+    // multi-branch queries persist() shared subplans, registered in
+    // the QueryCaches ledger; each is released once its result is
+    // materialized
     selected.foreach { case (name, fn) =>
-      runOne(spark, sfDir, outDir, name, fn)
-      // multi-branch queries persist() shared subplans, registered in
-      // the QueryCaches ledger; release them now that the result is
-      // materialized (clearCache is the belt-and-braces backstop for
-      // anything persisted outside the ledger)
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
+      graft.ops.QueryCaches.scoped(spark)(runOne(spark, sfDir, outDir, name, fn))
     }
     // re-dump AFTER the loop: queries that author their oracle at run
     // time (DynamicOracles — piece tables interpolated from in-query

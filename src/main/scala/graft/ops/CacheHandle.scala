@@ -146,4 +146,16 @@ object QueryCaches {
       confRestores.clear()
     }
   }
+
+  /** Run one query's work, then release what it left behind: the
+    * ledger ([[releaseAll]]) and, as the backstop for anything
+    * persisted outside it, the session's whole cache. The release
+    * runs in a `finally`, so a throwing body still leaves the next
+    * query a clean session; the body's exception propagates. Every
+    * harness (Verify, Bench, the tools) runs its queries through
+    * here.
+    */
+  def scoped[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+    try body
+    finally try releaseAll() finally spark.catalog.clearCache()
 }

@@ -91,16 +91,15 @@ object ExplainDump {
         "their `_scaled` twins below (q_batch_scaled, " +
         "q_reshape_scaled) are the production forms — see " +
         "docs/SCALE.md, round-9 addendum.\n")
+      // same per-query cache hygiene as Verify/Bench: builders
+      // eagerly materialize ledger caches; ~170 headline queries
+      // without release accumulate them all for the whole dump
       headline.foreach { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val formatted = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val formatted = graft.ops.QueryCaches.scoped(spark) {
+          SparkEntry.queries(name)(spark, sfDir).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode)
+        }
         sb.append(s"\n## $name\n\n```\n$formatted```\n")
-        // same per-query cache hygiene as Verify/Bench: builders
-        // eagerly materialize ledger caches; ~170 headline queries
-        // without release accumulate them all for the whole dump
-        graft.ops.QueryCaches.releaseAll()
-        spark.catalog.clearCache()
       }
       Files.createDirectories(Paths.get(out).toAbsolutePath.getParent)
       Files.writeString(Paths.get(out), sb.toString)

@@ -1,14 +1,13 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-import graft.{GraftSession, SparkEntry, Tables}
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Stage-level perf triage for a named declared query: runs it like
-  * Bench (noop sink, min timing discipline is the caller's job) while
-  * a listener records every stage's wall time, task time, shuffle and
-  * spill volumes, then prints the top stages. Use when a bench number
+  * Bench (same session, warm-up and [[Bench.runStep]]; min timing
+  * discipline is the caller's job) while a listener records every
+  * stage's wall time, task time, shuffle and spill volumes, then
+  * prints the top stages. Use when a bench number
   * moves and the cause isn't visible in the plan — the stage table
   * shows WHERE the seconds went (scan, exchange, checkpoint, driver
   * gaps show up as wall-vs-task skew).
@@ -18,18 +17,9 @@ import graft.{GraftSession, SparkEntry, Tables}
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_pagerank")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n).limit(1).count()
-      catch { case _: Throwable => () }
-    }
+    val sfDir = Tables.sfDir
+    val spark = GraftSession.local()
+    Tables.warm(spark, sfDir)
     final case class St(id: Int, nm: String, wallMs: Long, taskMs: Long,
         gcMs: Long,
         shufWriteMB: Double, shufReadMB: Double, spillMB: Double, tasks: Int)
@@ -73,17 +63,10 @@ object PerfProbe {
       }
     }
     // one warm pass untimed (codegen/JIT), then the measured pass
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    graft.ops.QueryCaches.releaseAll()
-    spark.catalog.clearCache()
+    val fn = SparkEntry.queries(name)
+    Bench.runStep(spark, sfDir, name, fn)
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.ops.QueryCaches.releaseAll()
-    spark.catalog.clearCache()
+    val (dt, ok) = Bench.runStep(spark, sfDir, name, fn)
     // drain BEFORE detaching/reading: stage-completed events are
     // delivered asynchronously on the bus thread
     org.apache.spark.sql.graftshim.Bridge
@@ -92,7 +75,8 @@ object PerfProbe {
     // snapshot under the same lock the bus thread appends with (the
     // drain guarantees completeness; this guarantees visibility)
     val snap = stages.synchronized(stages.toVector)
-    println(f"== $name measured pass: $dt%.2f s, ${snap.size} stages ==")
+    println(f"== $name measured pass: $dt%.2f s, ${snap.size} stages ==" +
+      (if (ok) "" else " FAILED"))
     val wallSum = snap.map(_.wallMs).sum / 1e3
     println(f"stage wall sum: $wallSum%.2f s (gap to pass time = driver/scheduling)")
     println(f"task CPU sum: ${snap.map(_.taskMs).sum / 1e3}%.1f s, GC sum: ${snap.map(_.gcMs).sum / 1e3}%.1f s")

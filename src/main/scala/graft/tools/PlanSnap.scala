@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{GraftSession, SparkEntry, Tables}
 
 /** Writes `explain("formatted")` for named declared queries to
@@ -20,22 +18,15 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlanSnap <outDir> <tag> <q1,q2,...>")
     val Array(outDir, tag, qlist) = args
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Tables.sfDir
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     qlist.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = graft.ops.QueryCaches.scoped(spark) {
+        SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+      }
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan)
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
       println(s"[plansnap] wrote ${name}_$tag.txt (${plan.length} chars)")
     }
     spark.stop()

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, StressProxies, Tables}
+import graft.{Bench, GraftSession, StressProxies, Tables}
 import graft.ops.QueryCaches
 
 /** Measured scaling curves for the scale-critical operator families —
@@ -69,14 +69,8 @@ object ScaleSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Tables.sfDir
+    val spark = GraftSession.local()
 
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -209,28 +203,24 @@ object ScaleSweep {
       ("cosine_nightly_indexed", cosIndexedBody))
 
     val rungs = Seq(1, 2, 4, 8, 16)
-    def loadNow(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ").head
-      catch { case _: Throwable => "?" }
-    val loadStart = loadNow()
+    def f2(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    val loadStart = Bench.loadAvg()
 
     // start-load gate: the sweep's whole point is a clean exponent,
     // and a contended host inflates exactly the big rungs (r15's
     // global_exact_quantiles tail read 2.36 under load rising 2.2 →
     // 19.2) — refuse to overwrite the committed curve with noise.
     // SPARK_GRAFT_SWEEP_FORCE=1 overrides for a deliberate dirty run.
-    val maxStartLoad = 4.0
     val force = sys.env.get("SPARK_GRAFT_SWEEP_FORCE").contains("1")
-    loadStart.toDoubleOption.filter(_ > maxStartLoad) match {
-      case Some(l) if !force =>
-        println(s"[sweep] SKIPPED: 1-min loadavg $l > $maxStartLoad — " +
-          "a contended host would publish noise as a scaling curve. " +
-          "Re-run idle, or force past the gate with " +
-          "SPARK_GRAFT_SWEEP_FORCE=1 (docs/SCALING.md left untouched).")
-        spark.stop()
-        return
-      case _ => ()
+    if (loadStart > Bench.maxStartLoad && !force) {
+      println(s"[sweep] SKIPPED: 1-min loadavg ${f2(loadStart)} > " +
+        s"${Bench.maxStartLoad} — " +
+        "a contended host would publish noise as a scaling curve. " +
+        "Re-run idle, or force past the gate with " +
+        "SPARK_GRAFT_SWEEP_FORCE=1 (docs/SCALING.md left untouched).")
+      spark.stop()
+      return
     }
 
     // SPARK_GRAFT_SWEEP_SHARD_ONLY=1 runs only the sharded-index
@@ -242,7 +232,7 @@ object ScaleSweep {
     val rows =
       if (shardOnly) Seq.empty
       else families.map { case (name, body) =>
-      val famLoad = loadNow()
+      val famLoad = f2(Bench.loadAvg())
       // one untimed warm pass at m=1 (codegen/JIT; page cache for the
       // table-backed families), then min-of-2 per rung — min-of-3 on
       // the top two rungs: the tail ratio is computed from exactly
@@ -250,12 +240,11 @@ object ScaleSweep {
       // where a single contended pass skews the ratio past 2.0 (two
       // r16 runs read the quantiles tail at 1.75 and 2.02 from the
       // same plan)
-      body(1); QueryCaches.releaseAll(); spark.catalog.clearCache()
+      QueryCaches.scoped(spark)(body(1))
       val times = rungs.map { m =>
         val passes = if (m >= rungs(rungs.size - 2)) 3 else 2
         val t = (1 to passes).map { _ =>
-          val t1 = timed(body(m))
-          QueryCaches.releaseAll(); spark.catalog.clearCache(); t1
+          QueryCaches.scoped(spark)(timed(body(m)))
         }.min
         println(f"[sweep] $name%-28s m=$m%-2d ${t}%8.2f s")
         m -> t
@@ -298,7 +287,7 @@ object ScaleSweep {
           if (scans.isEmpty) -1L
           else scans.map(_.metrics("numFiles").value).max
         }
-        val t = (1 to 2).map { _ =>
+        val t = (1 to 2).map { _ => QueryCaches.scoped(spark) {
           val out = graft.ops.TextDedup.prefixJaccardAgainstIndexed(
             spark, tp, narrowBatch, "doc_id", "text",
             shingleN = 3, threshold = 0.8)
@@ -306,12 +295,10 @@ object ScaleSweep {
           val plan = out.queryExecution.executedPlan
           readPref = scanRead(plan, s"${tp}_pref")
           readSh = scanRead(plan, s"${tp}_sh")
-          QueryCaches.releaseAll()
           t1
-        }.min
+        } }.min
         val totPref = spark.table(s"${tp}_pref").inputFiles.length.toLong
         val totSh = spark.table(s"${tp}_sh").inputFiles.length.toLong
-        spark.catalog.clearCache()
         println(f"[sweep] sharded_idx m=$m%-2d ${t}%8.2f s " +
           s"pref read $readPref/$totPref sh read $readSh/$totSh")
         (m, t, readPref, totPref, readSh, totSh)
@@ -321,7 +308,7 @@ object ScaleSweep {
     val sb = new StringBuilder
     sb.append("# SCALING — measured scaling exponents (generated by ")
     sb.append("`graft.tools.ScaleSweep`)\n\n")
-    sb.append(s"Input: `$sfDir`, local[$cpus]. Each rung multiplies the\n")
+    sb.append(s"Input: `$sfDir`, ${spark.sparkContext.master}. Each rung multiplies the\n")
     sb.append("family's input by m with shifted ids (distinct rows —\n")
     sb.append("group/bucket counts scale too); min of two passes per rung\n")
     sb.append("(three on the top two rungs — the tail's inputs);\n")
@@ -344,8 +331,6 @@ object ScaleSweep {
     sb.append("variance is ±20% (CLAUDE.md); read the curve, not one cell.\n\n")
     sb.append("| family | t(1×) s | t(2×) s | t(4×) s | t(8×) s | t(16×) s | fitted exponent | tail t16/t8 | load |\n")
     sb.append("|---|---|---|---|---|---|---|---|---|\n")
-    def f2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     rows.foreach { case (name, times, slope, famLoad) =>
       val cells = times.map { case (_, t) => f2(t) }
       val tail = times.last._2 / times(times.size - 2)._2
@@ -371,7 +356,8 @@ object ScaleSweep {
       sb.append(s"| $rs/$ts2 (${f2(rs.toDouble / ts2.toDouble)}) ")
       sb.append(s"| ${f2(t)} |\n")
     }
-    sb.append(s"\nLoad (1-min avg): start $loadStart, end ${loadNow()}.\n")
+    sb.append(s"\nLoad (1-min avg): start ${f2(loadStart)}, " +
+      s"end ${f2(Bench.loadAvg())}.\n")
     // anchor the artifact at the repo root (nearest ancestor holding
     // build.sbt), not the CWD — running from elsewhere used to write
     // docs/SCALING.md into whatever directory sbt happened to run in

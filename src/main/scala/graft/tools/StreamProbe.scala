@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import graft.{GraftSession, SparkEntry, Tables}
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Micro-batch attribution for a declared stream query: run it like
   * Bench while a [[StreamingQueryListener]] collects every progress
@@ -19,18 +18,9 @@ import graft.{GraftSession, SparkEntry, Tables}
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_stream_sjoin_outer")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n).limit(1).count()
-      catch { case _: Throwable => () }
-    }
+    val sfDir = Tables.sfDir
+    val spark = GraftSession.local()
+    Tables.warm(spark, sfDir)
     // one warm pass (codegen, page cache), then the measured pass —
     // the Bench discipline
     val phases = new java.util.concurrent.ConcurrentHashMap[String, Long]()
@@ -57,15 +47,17 @@ object StreamProbe {
     }
     def pass(label: String): Double = {
       phases.clear(); batches.set(0)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
+      val (dt, ok) = Bench.runStep(spark, sfDir, name, SparkEntry.queries(name))
+      // progress events reach the listener through the bus's "streams"
+      // queue: drain it before reading the map (and so before the next
+      // pass clears it), or this pass prints without its last
+      // micro-batches and they land in the next pass's totals
+      org.apache.spark.sql.graftshim.Bridge
+        .drainListenerBus(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val total = phases.asScala.toSeq.sortBy(-_._2)
-      println(f"== $name $label pass: $dt%.2f s, ${batches.get()} micro-batches ==")
+      println(f"== $name $label pass: $dt%.2f s, ${batches.get()} micro-batches ==" +
+        (if (ok) "" else " FAILED"))
       total.foreach { case (k, ms) => println(f"  $k%-28s ${ms / 1000.0}%8.3f s") }
       dt
     }

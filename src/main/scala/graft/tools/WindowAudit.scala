@@ -182,10 +182,7 @@ object WindowAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$cpus]")).getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val skipStreams = sys.env.get("SPARK_GRAFT_AUDIT_SKIP_STREAMS").contains("1")
     val t00 = System.nanoTime()
@@ -196,13 +193,13 @@ object WindowAudit {
     var builders = Vector.empty[(String, Int)]
     names.foreach { name =>
       val t0 = System.nanoTime()
-      val (r, builderHits) = builderActionAudit(spark) {
-        val df = graft.SparkEntry.queries(name)(spark, dir)
-        val p = df.queryExecution.executedPlan
-        (unpartitionedWindows(p), cartesianProducts(p))
+      val (r, builderHits) = graft.ops.QueryCaches.scoped(spark) {
+        builderActionAudit(spark) {
+          val df = graft.SparkEntry.queries(name)(spark, dir)
+          val p = df.queryExecution.executedPlan
+          (unpartitionedWindows(p), cartesianProducts(p))
+        }
       }
-      graft.ops.QueryCaches.releaseAll()
-      spark.catalog.clearCache()
       val dt = (System.nanoTime() - t0) / 1e9
       if (builderHits > 0) {
         builders :+= (name, builderHits)

@@ -94,4 +94,14 @@ class BenchTripwireSpec extends AnyFunSuite {
     assert(slower == 0, "a crash was classed as slower")
     assert(common - faster - within - slower == 2) // the failed count
   }
+
+  test("a focus selection with an unknown name is rejected, not run empty") {
+    // a typo used to filter every query out and print a clean-looking
+    // "value":0.000,"n":0 report
+    val typo = SparkEntry.select("q_sql_q1x,q_graph_hub", Bench.runnable)
+    assert(typo == Left("unknown query in selection: q_sql_q1x"))
+    // trimmed, empties dropped; the proxy rows are selectable too
+    assert(SparkEntry.select(" q_sql_q1 ,, q_dedup_minhash_16x ",
+      Bench.runnable) == Right(Set("q_sql_q1", "q_dedup_minhash_16x")))
+  }
 }

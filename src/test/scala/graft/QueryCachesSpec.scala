@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,5 +90,48 @@ class QueryCachesSpec extends AnyFunSuite {
     assert(spark.conf.getOption(key).isEmpty,
       "a failed release left the query's conf set")
     QueryCaches.releaseAll() // the ledger is empty: nothing throws again
+  }
+
+  test("scoped: a throwing body still releases its caches and confs") {
+    import spark.implicits._
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
+    assert(spark.conf.getOption(key).isEmpty, "test precondition")
+    var ledger: DataFrame = null
+    var outside: DataFrame = null
+    val e = intercept[IllegalStateException] {
+      QueryCaches.scoped(spark) {
+        ledger = (0L until 100L).toDF("id").transform(QueryCaches.persist)
+        outside = (0L until 50L).toDF("id").persist()
+        ledger.count(); outside.count()
+        QueryCaches.withQueryConf(spark, key -> "7")
+        throw new IllegalStateException("query failed")
+      }
+    }
+    assert(e.getMessage == "query failed")
+    assert(ledger.storageLevel == StorageLevel.NONE,
+      "a failed query's ledger cache leaked")
+    assert(outside.storageLevel == StorageLevel.NONE,
+      "a failed query's cache outside the ledger leaked")
+    assert(spark.conf.getOption(key).isEmpty,
+      "a failed query's conf leaked")
+  }
+
+  test("Bench.runStep: a throwing query comes back failed, caches released") {
+    import spark.implicits._
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
+    assert(spark.conf.getOption(key).isEmpty, "test precondition")
+    var ledger: DataFrame = null
+    val (dt, ok) = Bench.runStep(spark, "unused", "q_throws", (s, _) => {
+      ledger = (0L until 100L).toDF("id").transform(QueryCaches.persist)
+      ledger.count()
+      QueryCaches.withQueryConf(s, key -> "7")
+      throw new IllegalStateException("query failed")
+    })
+    assert(!ok, "a throwing query was reported as a success")
+    assert(dt >= 0.0)
+    assert(ledger.storageLevel == StorageLevel.NONE,
+      "a failed run step leaked its cache")
+    assert(spark.conf.getOption(key).isEmpty,
+      "a failed run step leaked its conf")
   }
 }
