@@ -47,6 +47,18 @@ object XlsxIngest {
 
   final case class Options(leapBugCompat: Boolean = true)
 
+  /** Cells of the largest dense matrix a sheet may parse to: Excel's
+    * full width (16384 columns) by 4096 rows, ~256 MB of references.
+    */
+  val MaxDenseCells: Long = 1L << 26
+
+  /** A sheet whose non-empty cells span more than [[MaxDenseCells]]. */
+  final class SheetTooLargeException(val sheet: String, val rows: Int,
+      val cols: Int)
+      extends RuntimeException(s"sheet '$sheet': non-empty cells span " +
+        s"$rows rows x $cols columns, more than the $MaxDenseCells " +
+        "cells of a dense sheet matrix")
+
   /** Parse every worksheet: insertion-ordered map sheetName → DataFrame.
     * Sheets that parse to nothing (blank worksheets — Excel routinely
     * writes an untouched Sheet2 with no cells) are skipped, matching
@@ -93,7 +105,7 @@ object XlsxIngest {
         // the reference keeps only the basename and prefixes the dir.
         val base = target.substring(target.lastIndexOf('/') + 1)
         open(s"xl/worksheets/$base").map { in =>
-          sheetName -> parseSheet(in, shared, areDates, opts)
+          sheetName -> parseSheet(sheetName, in, shared, areDates, opts)
         }
       }
     } finally zip.close()
@@ -220,6 +232,7 @@ object XlsxIngest {
 
   /** One worksheet → trimmed dense matrix (`xlsparser.js:121-214`). */
   private[ingest] def parseSheet(
+      sheet: String,
       in: InputStream,
       shared: Vector[String],
       areDates: Vector[Boolean],
@@ -253,8 +266,12 @@ object XlsxIngest {
           }
         } else raw
       cells += ((row, colNum, value))
-      if (row > maxRowSeen) maxRowSeen = row
-      if (colNum > maxColSeen) maxColSeen = colNum
+      // the extent counts values only: an empty (e.g. styled-only)
+      // cell far out would size the dense fill, then be trimmed away
+      if (value.nonEmpty) {
+        if (row > maxRowSeen) maxRowSeen = row
+        if (colNum > maxColSeen) maxColSeen = colNum
+      }
     }
 
     while (r.hasNext) {
@@ -311,6 +328,8 @@ object XlsxIngest {
     val rows = maxRowSeen
     val cols = maxColSeen
     if (rows == 0 || cols == 0) return Vector.empty
+    if (rows.toLong * cols > MaxDenseCells)
+      throw new SheetTooLargeException(sheet, rows, cols)
 
     val data = Array.fill(rows, cols)("")
     cells.foreach { case (row, colNum, value) =>

@@ -39,6 +39,12 @@ object Bridge {
       case _ => None
     }
 
+  /** Spark's file-index rule for names it does not read as data
+    * (`_`/`.`-prefixed, `._COPYING_`) — `private[spark]`.
+    */
+  def isHiddenPath(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Block until the listener bus has delivered every queued event —
     * `private[spark]`, needed by tooling (PerfProbe, WindowAudit) that
     * reads listener-collected metrics right after an action: without

@@ -1,14 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{concat, lit, when}
-import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +14,8 @@ import org.scalatest.time.{Seconds, Span}
 import graft.sync.{DropCreate, JdbcDestination, LocalDestination, StagedCopy, Truncate}
 
 class DestinationSpec extends AnyFunSuite with TimeLimits {
+
+  import TestSpark.jobsOf
 
   lazy val spark = TestSpark.spark
 
@@ -76,32 +75,6 @@ class DestinationSpec extends AnyFunSuite with TimeLimits {
   }
 
   implicit val signaler: Signaler = ThreadSignaler
-
-  /** Run one sink call; returns its row count and the Spark jobs it
-    * ran. Jobs are told apart by a job group, so work left running by
-    * other suites in the shared session is not counted.
-    */
-  private def jobsOf(call: => Long): (Long, Int) = {
-    val sc = spark.sparkContext
-    val group = s"destination-spec-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "one sink call")
-    try {
-      val n = call
-      Bridge.drainListenerBus(sc)
-      (n, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def cachesEmpty: Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -1,10 +1,14 @@
 package graft
 
+import java.nio.file.Files
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.ingest.XlsxIngest
 
-class XlsxIngestSpec extends AnyFunSuite {
+class XlsxIngestSpec extends AnyFunSuite with TimeLimits {
 
   lazy val matrices: Map[String, Vector[Vector[String]]] =
     XlsxIngest.parseMatrices(XlsxFixture.create().toString).toMap
@@ -171,5 +175,36 @@ class XlsxIngestSpec extends AnyFunSuite {
     assert(df.count() == 3)
     val first = df.orderBy("Name").collect().head
     assert(first.getString(0) == "2.5") // numeric row, sorted first
+  }
+
+  implicit val signaler: Signaler = ThreadSignaler
+
+  /** One value at A1 and one cell at XFD64000: 64000 x 16384 apart. */
+  private def farCell(cell: String) = XlsxFixture.createWith(
+    s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
+       |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+       |<sheetData>
+       |<row r="1"><c r="A1"><v>1</v></c></row>
+       |<row r="64000">$cell</row>
+       |</sheetData>
+       |</worksheet>""".stripMargin)
+
+  test("an empty styled cell far out does not size the dense matrix") {
+    val path = farCell("""<c r="XFD64000" s="0"/>""")
+    assert(Files.size(path) < 2048)
+    val m = failAfter(Span(30, Seconds)) {
+      XlsxIngest.parseMatrices(path.toString).toMap
+    }
+    assert(m("Only") == Vector(Vector("1")))
+  }
+
+  test("a non-empty extent too large for a dense matrix fails by name") {
+    val e = failAfter(Span(30, Seconds)) {
+      intercept[XlsxIngest.SheetTooLargeException] {
+        XlsxIngest.parseMatrices(farCell("""<c r="XFD64000"><v>2</v></c>""").toString)
+      }
+    }
+    assert((e.sheet, e.rows, e.cols) == (("Only", 64000, 16384)))
+    assert(e.getMessage.contains("'Only'") && e.getMessage.contains("64000 rows x 16384"))
   }
 }
