@@ -8,7 +8,8 @@ import graft.{GraftSession, SparkEntry, Tables}
   * per-query files — the optimization-round evidence artifact
   * (plans/r<N>/<query>_<tag>.txt). Unlike [[ExplainDump]] (one
   * markdown for the headline set), this snapshots exactly the queries
-  * an optimization touches, before and after.
+  * an optimization touches, before and after. Plans are written
+  * [[normalize]]d, so two snapshots compare with plain `diff`.
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <tag> <q1,q2,...>
   * (side-effecting queries run their builds — plans are of the final
@@ -22,13 +23,28 @@ object PlanSnap {
     val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     qlist.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val plan = graft.ops.QueryCaches.scoped(spark) {
+      val plan = normalize(graft.ops.QueryCaches.scoped(spark) {
         SparkEntry.queries(name)(spark, sfDir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)
-      }
+      }, spark.sparkContext.applicationId)
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan)
       println(s"[plansnap] wrote ${name}_$tag.txt (${plan.length} chars)")
     }
     spark.stop()
   }
+
+  /** `plan` with the run-specific tokens fixed: `#N` expression ids,
+    * `plan_id=N`, the application id `appId` (also in its
+    * scratch-table form, non-alphanumerics as `_`) and whole-stage
+    * codegen ids (`*(N)`, `[codegen id : N]`). What is left differs
+    * between two runs only where the plans do.
+    */
+  def normalize(plan: String, appId: String): String =
+    plan
+      .replace(appId, "<app-id>")
+      .replace(appId.replaceAll("[^a-zA-Z0-9]", "_"), "<app-id>")
+      .replaceAll("#\\d+", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("\\*\\(\\d+\\)", "*(N)")
+      .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : N]")
 }

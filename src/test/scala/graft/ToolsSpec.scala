@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tools.{CountsStamp, ScaleSweep, WindowAudit}
+import graft.tools.{CountsStamp, PlanSnap, ScaleSweep, WindowAudit}
 
 /** Round-close tooling: the README count stamper's patterns and the
   * unpartitioned-window counter's traversal (incl. the persist
@@ -63,6 +63,34 @@ class ToolsSpec extends AnyFunSuite {
     val out = CountsStamp.stamp("# 310 specs and (5 declared queries",
       queries = 7, oracles = 7, testCount = None)
     assert(out.contains("# 310 specs") && out.contains("(7 declared queries"))
+  }
+
+  test("PlanSnap.normalize fixes run-specific ids and keeps real plan differences") {
+    def plan(app: String, id: Int, cg: Int, build: String) =
+      s"""* HashAggregate (3)
+         |+- BroadcastHashJoin Inner Build$build (2)
+         |   +- Scan parquet spark_catalog.default.graft_ppjidx_${app.replace('-', '_')}_rank (1)
+         |(1) Scan parquet spark_catalog.default.graft_ppjidx_${app.replace('-', '_')}_rank [codegen id : $cg]
+         |Location: InMemoryFileIndex [file:/tmp/graft_ppjidx_${app}_rank]
+         |Output [2]: [doc_id#${id}L, shingle#${id + 1}]
+         |*($cg) Project [doc_id#${id}L], plan_id=${id + 7}
+         |""".stripMargin
+    val a = PlanSnap.normalize(plan("local-1787048702576", 17248, 4, "Right"),
+      "local-1787048702576")
+    val b = PlanSnap.normalize(plan("local-1797000000001", 33783, 11, "Right"),
+      "local-1797000000001")
+    assert(a == b)
+    assert(!a.contains("local") && !a.contains("1787048702576"), a)
+    assert(a.contains("graft_ppjidx_<app-id>_rank") &&
+      a.contains("file:/tmp/graft_ppjidx_<app-id>_rank"), a)
+    assert(a.contains("[doc_id#NL, shingle#N]") &&
+      a.contains("*(N) Project [doc_id#NL], plan_id=N") &&
+      a.contains("[codegen id : N]"), a)
+    // operator ids and a different build side are plan content
+    assert(a.contains("HashAggregate (3)"))
+    val c = PlanSnap.normalize(plan("local-1787048702576", 17248, 4, "Left"),
+      "local-1787048702576")
+    assert(a != c)
   }
 
   test("unpartitionedWindows counts global windows, not keyed ones") {
