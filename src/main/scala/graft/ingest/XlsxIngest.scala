@@ -44,6 +44,7 @@ object XlsxIngest {
   private val BuiltinDateIds = Set(14, 15, 16, 17, 22, 30)
   // unescaped m/d/y (xlsparser.js:73: /[^\\][mdy]|^[mdy]/)
   private val DateCodeRe = "[^\\\\][mdy]|^[mdy]".r
+  private val IntPrefixRe = "^[+-]?\\d+".r
 
   final case class Options(leapBugCompat: Boolean = true)
 
@@ -357,9 +358,6 @@ object XlsxIngest {
   }
 
   /** JS `parseInt`: optional sign + leading digit run; else None. */
-  private[ingest] def parseIntPrefix(s: String): Option[Int] = {
-    val t = s.trim
-    val m = "^[+-]?\\d+".r.findFirstIn(t)
-    m.flatMap(_.toIntOption)
-  }
+  private[ingest] def parseIntPrefix(s: String): Option[Int] =
+    IntPrefixRe.findFirstIn(s.trim).flatMap(_.toIntOption)
 }

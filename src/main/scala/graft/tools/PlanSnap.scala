@@ -35,9 +35,11 @@ object PlanSnap {
 
   /** `plan` with the run-specific tokens fixed: `#N` expression ids,
     * `plan_id=N`, the application id `appId` (also in its
-    * scratch-table form, non-alphanumerics as `_`) and whole-stage
-    * codegen ids (`*(N)`, `[codegen id : N]`). What is left differs
-    * between two runs only where the plans do.
+    * scratch-table form, non-alphanumerics as `_`), whole-stage
+    * codegen ids (`*(N)`, `[codegen id : N]`) and the AQE stage ids a
+    * `ShuffleQueryStage` or `BroadcastQueryStage` prints as its
+    * `Arguments: N` (they follow the order stages finish in). What is
+    * left differs between two runs only where the plans do.
     */
   def normalize(plan: String, appId: String): String =
     plan
@@ -47,4 +49,9 @@ object PlanSnap {
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("\\*\\(\\d+\\)", "*(N)")
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : N]")
+      .replaceAll(StageArgs, "$1Arguments: N")
+
+  /** A shuffle or broadcast query stage's details block, up to its id. */
+  private val StageArgs =
+    "(?m)(^\\(\\d+\\) (?:Shuffle|Broadcast)QueryStage\n(?:(?!Arguments: ).+\n)*)Arguments: \\d+$"
 }

@@ -11,6 +11,7 @@ import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.model.SheetMatrix
 import graft.sync.{DropCreate, JdbcDestination, LocalDestination, StagedCopy, Truncate}
 
 class DestinationSpec extends AnyFunSuite with TimeLimits {
@@ -31,6 +32,59 @@ class DestinationSpec extends AnyFunSuite with TimeLimits {
     assert(lines.size == 3)
     assert(report.render ==
       s"Created $f.\n2 records loaded successfully.\n")
+  }
+
+  private def listNames(dir: Path): Seq[String] =
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+      .map(_.getFileName.toString).toList.sorted)
+
+  test("local destination writes the bytes of Spark's CSV part file and nothing else") {
+    import spark.implicits._
+    val tricky = SheetMatrix.toDataFrame(spark, Seq(
+      // duplicate and empty header names
+      Seq("Amount", "amount", "", "note", ""),
+      Seq("a,b", "say \"hi\"", "line1\nline2", "cr\rx", "crlf\r\ny"),
+      Seq("  lead", "trail  ", "back\\slash", "na\u00efve \u65e5\u672c", "\u00e9"),
+      Seq("", null, "x", null, "")))
+    val headerOnly = SheetMatrix.toDataFrame(spark, Seq(Seq("a", "b")))
+    val emptyLocal = Seq.empty[(String, String)].toDF("a", "b")
+    val base = Files.createTempDirectory("graft-bytes")
+    for ((name, df, rows) <- Seq(("tricky", tricky, 3L),
+        ("header_only", headerOnly, 0L), ("empty_local", emptyLocal, 0L))) {
+      val ref = base.resolve(s"spark_$name")
+      df.coalesce(1).write.option("header", "true").option("emptyValue", "")
+        .csv(ref.toString)
+      val part = listNames(ref).filter(_.startsWith("part-"))
+      assert(part.size == 1, part)
+      val report = LocalDestination.write(df, name, s"local_$name", base.toString)
+      assert(report.nRecords == rows, name)
+      val out = base.resolve(s"local_$name")
+      // no _SUCCESS, .crc, _temporary or temp file beside the table
+      assert(listNames(out) == Seq(s"$name.csv"), name)
+      val got = Files.readAllBytes(out.resolve(s"$name.csv"))
+      val want = Files.readAllBytes(ref.resolve(part.head))
+      assert(got.sameElements(want),
+        s"$name:\n${new String(got, "UTF-8")}\n--- vs ---\n${new String(want, "UTF-8")}")
+    }
+  }
+
+  test("a failed local write leaves the old <table>.csv and no temp file") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val base = Files.createTempDirectory("graft-failed")
+    LocalDestination.write(Seq(("1", "a")).toDF("id", "name"), "snap", "", base.toString)
+    val before = Files.readAllBytes(base.resolve("snap.csv"))
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // row 1 fails to cast in the write's task, after row 0 is written
+      val bad = spark.range(0, 2, 1, 1).select(
+        when(col("id") === 1, lit("x")).otherwise(col("id").cast("string"))
+          .cast("int").as("id"))
+      intercept[Exception](LocalDestination.write(bad, "snap", "", base.toString))
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+    assert(Files.readAllBytes(base.resolve("snap.csv")).sameElements(before))
+    assert(listNames(base) == Seq("snap.csv"))
   }
 
   test("absolute path overrides base dir (data.py:138-142)") {

@@ -93,6 +93,35 @@ class ToolsSpec extends AnyFunSuite {
     assert(a != c)
   }
 
+  test("PlanSnap.normalize fixes AQE query-stage ids and no other Arguments") {
+    def plan(shuffleId: Int, broadcastId: Int) =
+      s"""(3) ShuffleQueryStage
+         |Output [2]: [fp#12, min#13L]
+         |Arguments: $shuffleId
+         |
+         |(5) BroadcastQueryStage
+         |Output [1]: [doc_id#14L]
+         |Arguments: $broadcastId
+         |
+         |(6) TableCacheQueryStage
+         |Output [1]: [doc_id#14L]
+         |Arguments: 0
+         |
+         |(7) Exchange
+         |Input [1]: [doc_id#14L]
+         |Arguments: hashpartitioning(doc_id#14L, 4), ENSURE_REQUIREMENTS, [plan_id=20]
+         |""".stripMargin
+    val a = PlanSnap.normalize(plan(3, 4), "local-1")
+    val b = PlanSnap.normalize(plan(4, 3), "local-1")
+    assert(a.contains("ShuffleQueryStage\nOutput [2]: [fp#N, min#NL]\nArguments: N\n"), a)
+    assert(a.contains("BroadcastQueryStage\nOutput [1]: [doc_id#NL]\nArguments: N\n"), a)
+    assert(a.contains("Arguments: hashpartitioning(doc_id#NL, 4), ENSURE_REQUIREMENTS, [plan_id=N]"), a)
+    // only those two stage kinds: a table-cache stage's argument stays
+    assert(a.contains("TableCacheQueryStage\nOutput [1]: [doc_id#NL]\nArguments: 0\n"), a)
+    assert(a == b)
+    assert(a != PlanSnap.normalize(plan(3, 4).replace("Arguments: 0", "Arguments: 1"), "local-1"))
+  }
+
   test("unpartitionedWindows counts global windows, not keyed ones") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
