@@ -116,11 +116,17 @@ object Tables {
     * processes would overwrite each other's layouts and checkpoints
     * mid-query — so the name carries the Spark application id:
     * stable within a run (the same query function can re-enter its
-    * own directory), unique across concurrent runs.
+    * own directory), unique across concurrent runs. The directory is
+    * deleted when the JVM exits (Spark's shutdown-delete hook), so
+    * whatever a caller writes must live UNDER it: a standing index
+    * given it as its `pathPrefix` keeps every table inside it.
     */
-  def scratchDir(spark: SparkSession, name: String): java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+  def scratchDir(spark: SparkSession, name: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"${name}_${spark.sparkContext.applicationId}")
+    org.apache.spark.sql.graftshim.Bridge.deleteAtExit(dir.toFile)
+    dir
+  }
 
   /** Per-run catalog table name `<name>_<application id>` — the
     * [[scratchDir]] rule for tables, with the id's non-alphanumerics

@@ -33,18 +33,27 @@ object A1Ref {
     sb.result()
   }
 
-  private val RefPattern = "^([A-Z]+)([0-9]+)$".r
-
   /** `"BC12"` → (row = 12, col = 55), mirroring `new Cell(cellRef)`
-    * (`xlsparser.js:98-102`).
+    * (`xlsparser.js:98-102`). The trimmed input must be 1+ letters
+    * `A-Z` then 1–9 digits `0-9` (the form `^([A-Z]+)([0-9]+)$`), or it
+    * fails with IllegalArgumentException. The digit bound keeps the row
+    * inside Int (xlsx rows max out at 1,048,576, 7 digits); the letters
+    * obey [[colToInt]]. A character scan, not a regex: it runs once per
+    * cell of every parsed sheet.
     */
-  def parse(ref: String): (Int, Int) = ref.trim match {
-    // the digit-count bound keeps toInt from throwing a raw
-    // NumberFormatException (the documented failure is
-    // IllegalArgumentException) on an oversized row from a malformed
-    // file; xlsx rows max out at 1,048,576 (7 digits)
-    case RefPattern(letters, digits) if digits.length <= 9 =>
-      (digits.toInt, colToInt(letters))
-    case other => throw new IllegalArgumentException(s"not an A1 ref: '$other'")
+  def parse(ref: String): (Int, Int) = {
+    val s = ref.trim
+    var i = 0
+    while (i < s.length && s.charAt(i) >= 'A' && s.charAt(i) <= 'Z') i += 1
+    val letters = i
+    var row = 0
+    while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') {
+      row = row * 10 + (s.charAt(i) - '0')
+      i += 1
+    }
+    val digits = i - letters
+    if (letters == 0 || digits == 0 || digits > 9 || i < s.length)
+      throw new IllegalArgumentException(s"not an A1 ref: '$s'")
+    (row, colToInt(s.substring(0, letters)))
   }
 }

@@ -3,7 +3,7 @@ package graft.ingest
 import java.io.InputStream
 import java.util.zip.ZipFile
 
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
@@ -93,11 +93,12 @@ object XlsxIngest {
       def open(name: String): Option[InputStream] =
         Option(zip.getEntry(name)).map(zip.getInputStream)
 
+      val xml = xmlFactory()
       val shared = open("xl/sharedStrings.xml")
-        .map(parseSharedStrings).getOrElse(Vector.empty)
+        .map(parseSharedStrings(xml, _)).getOrElse(Vector.empty)
       val areDates = open("xl/styles.xml")
-        .map(parseStyles).getOrElse(Vector.empty)
-      val sheets = parseSheetCatalog(
+        .map(parseStyles(xml, _)).getOrElse(Vector.empty)
+      val sheets = parseSheetCatalog(xml,
         open("xl/workbook.xml"), open("xl/_rels/workbook.xml.rels"))
         .filter { case (n, _) => only.forall(_ == n) }
 
@@ -106,7 +107,7 @@ object XlsxIngest {
         // the reference keeps only the basename and prefixes the dir.
         val base = target.substring(target.lastIndexOf('/') + 1)
         open(s"xl/worksheets/$base").map { in =>
-          sheetName -> parseSheet(sheetName, in, shared, areDates, opts)
+          sheetName -> parseSheet(xml, sheetName, in, shared, areDates, opts)
         }
       }
     } finally zip.close()
@@ -114,20 +115,26 @@ object XlsxIngest {
 
   // ---- zip member parsers -------------------------------------------------
 
-  private def reader(in: InputStream): XMLStreamReader = {
+  /** The StAX factory of one workbook parse. `newInstance` is a
+    * service lookup over the classpath, so one parse makes one factory
+    * and reads every member with it; a factory is not shared across
+    * parses, which may run on concurrent executor threads.
+    */
+  private def xmlFactory(): XMLInputFactory = {
     val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.IS_COALESCING, java.lang.Boolean.TRUE)
     f.setProperty(XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
       java.lang.Boolean.FALSE)
-    f.createXMLStreamReader(in)
+    f
   }
 
   /** `<si>` entries; each is the concatenation of its `<t>` descendants
     * (covers plain and rich-text runs).
     */
-  private[ingest] def parseSharedStrings(in: InputStream): Vector[String] = {
-    val r = reader(in)
+  private[ingest] def parseSharedStrings(xml: XMLInputFactory,
+      in: InputStream): Vector[String] = {
+    val r = xml.createXMLStreamReader(in)
     val out = Vector.newBuilder[String]
     val cur = new StringBuilder
     var inSi = false
@@ -158,8 +165,9 @@ object XlsxIngest {
   /** `cellXfs` ordinal → is-date?, from builtin ids + custom numFmts
     * with unescaped m/d/y (`xlsparser.js:52-82`).
     */
-  private[ingest] def parseStyles(in: InputStream): Vector[Boolean] = {
-    val r = reader(in)
+  private[ingest] def parseStyles(xml: XMLInputFactory,
+      in: InputStream): Vector[Boolean] = {
+    val r = xml.createXMLStreamReader(in)
     val dateIds = mutable.Set.empty[Int] ++ BuiltinDateIds
     val xfs = Vector.newBuilder[Boolean]
     val pendingXf = mutable.ArrayBuffer.empty[Int]
@@ -194,11 +202,12 @@ object XlsxIngest {
     * `/worksheet` type only (`xlsparser.js:104-118`).
     */
   private[ingest] def parseSheetCatalog(
+      xml: XMLInputFactory,
       workbook: Option[InputStream],
       rels: Option[InputStream]): Seq[(String, String)] = {
     val relMap = mutable.HashMap.empty[String, (String, String)] // id → (type, target)
     rels.foreach { in =>
-      val r = reader(in)
+      val r = xml.createXMLStreamReader(in)
       while (r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT &&
           r.getLocalName == "Relationship") {
@@ -213,7 +222,7 @@ object XlsxIngest {
     }
     val out = mutable.ArrayBuffer.empty[(String, String)]
     workbook.foreach { in =>
-      val r = reader(in)
+      val r = xml.createXMLStreamReader(in)
       while (r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT &&
           r.getLocalName == "sheet") {
@@ -233,12 +242,13 @@ object XlsxIngest {
 
   /** One worksheet → trimmed dense matrix (`xlsparser.js:121-214`). */
   private[ingest] def parseSheet(
+      xml: XMLInputFactory,
       sheet: String,
       in: InputStream,
       shared: Vector[String],
       areDates: Vector[Boolean],
       opts: Options): Vector[Vector[String]] = {
-    val r = reader(in)
+    val r = xml.createXMLStreamReader(in)
     // sparse collect first; densify after the extent is known
     val cells = mutable.ArrayBuffer.empty[(Int, Int, String)]
     var curRow = 0

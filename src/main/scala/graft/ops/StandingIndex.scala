@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * `pairsAgainstIndexed`):
   *
   *  - naming: every index table is `<prefix>_<suffix>`; with a
-  *    `pathPrefix` it is EXTERNAL at `<pathPrefix>_<suffix>`;
+  *    `pathPrefix` it is EXTERNAL at `<pathPrefix>/<suffix>`, so one
+  *    directory holds the whole index (and deleting it deletes all);
   *  - layout: bucketed and key-sorted on its join key
   *    ([[ScaleOps.writeBucketed]] / [[ScaleOps.appendBucketed]] —
   *    zero corpus-side exchange for a reader joining on that key).
@@ -42,7 +43,7 @@ private[ops] final class StandingIndex private (
   def table(suffix: String): String = s"${prefix}_$suffix"
 
   private def path(suffix: String): Option[String] =
-    pathPrefix.map(p => s"${p}_$suffix")
+    pathPrefix.map(p => s"$p/$suffix")
 
   private def shardOf(key: String): Column =
     pmod(hash(col(key)), lit(meta.shardBy))

@@ -1,6 +1,7 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.model.Identifiers
 
@@ -84,20 +85,22 @@ object JdbcDestination {
       batchSize = batchSize)
   }
 
-  /** Execute a plan through Spark's JDBC writer. */
+  /** Execute a plan through Spark's JDBC writer. The row count is an
+    * observed metric of the write's own pass, so the load counts in one
+    * Spark job, with no cache and no second scan.
+    */
   def write(df: DataFrame, url: String, p: Plan,
       props: Map[String, String] = Map.empty): LoadReport = {
-    val n = LoadReport.countedWrite(df) { d =>
-      val w = d.write.format("jdbc")
-        .mode(SaveMode.Overwrite)
-        .option("url", url)
-        .option("dbtable", p.table)
-        .option("truncate", p.truncate.toString)
-        .option("createTableColumnTypes", p.columnTypes)
-        .option("batchsize", p.batchSize.toString)
-      props.foreach { case (k, v) => w.option(k, v) }
-      w.save()
-    }
-    LoadReport(Some(p.action), p.table, n)
+    val o = Observation()
+    val w = df.observe(o, count(lit(1)).as("n")).write.format("jdbc")
+      .mode(SaveMode.Overwrite)
+      .option("url", url)
+      .option("dbtable", p.table)
+      .option("truncate", p.truncate.toString)
+      .option("createTableColumnTypes", p.columnTypes)
+      .option("batchsize", p.batchSize.toString)
+    props.foreach { case (k, v) => w.option(k, v) }
+    w.save()
+    LoadReport(Some(p.action), p.table, o.get("n").asInstanceOf[Long])
   }
 }

@@ -1,8 +1,5 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions.{count, lit}
-
 /** Human-readable load report, matching the reference's strings
   * (`app/data.py:134`, `:153`, `:202`, `:255`) with its bugs fixed:
   *
@@ -10,6 +7,10 @@ import org.apache.spark.sql.functions.{count, lit}
   *    reference over-counts on Azure `:189` and Snowflake `:224`);
   *  - B5: `action` is always defined, even for empty sheets (the
   *    reference leaves it unbound when `n_records == 0`, `:255`).
+  *
+  * Every sink counts `nRecords` in the write's own pass: the file
+  * sinks' tasks return their row counts ([[LocalDestination]]), the
+  * JDBC write observes a count ([[JdbcDestination.write]]).
   */
 final case class LoadReport(
     action: Option[SyncAction],
@@ -21,18 +22,5 @@ final case class LoadReport(
       s"${a.pastTense} and loaded into $target.\n$nRecords records loaded successfully.\n"
     case None =>
       s"Created $target.\n$nRecords records loaded successfully.\n"
-  }
-}
-
-object LoadReport {
-
-  /** Run `save` over `df` and return the number of rows it wrote: an
-    * observed metric of the write's own pass, so every sink loads and
-    * counts in one Spark job, with no cache and no second scan.
-    */
-  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
-    val o = Observation()
-    save(df.observe(o, count(lit(1)).as("n")))
-    o.get("n").asInstanceOf[Long]
   }
 }

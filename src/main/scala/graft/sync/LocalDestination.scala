@@ -1,7 +1,10 @@
 package graft.sync
 
+import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.Charset
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
+import java.util.Comparator
+import java.util.zip.GZIPOutputStream
 
 import scala.jdk.CollectionConverters._
 
@@ -10,20 +13,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 
 /** `destination_local` (`app/data.py:137-153`): resolve `path` under a
   * base directory (absolute paths respected), mkdir -p, write
   * `<table>.csv` with header, report the record count (header-exclusive
   * — reference bug B4 fixed at the source).
   *
-  * The write is one Spark job over `df.coalesce(1)`: its single task
-  * streams the rows through Spark's own CSV generator, with the options
-  * Spark's CSV writer builds for the same write, into a hidden temp file
-  * next to the target, and returns the row count. The driver then moves
-  * that file over `<table>.csv`. A one-file output needs no file-commit
-  * protocol: a failed write leaves the old `<table>.csv` as it was and
-  * no temp file behind. Callers loading big data should use [[writeDir]]
-  * instead, which keeps full write parallelism.
+  * Every file sink here ([[write]], [[writeDir]] and [[StagedCopy]]'s
+  * stage) is one Spark job with no file-commit protocol. Each task
+  * streams its rows through Spark's own CSV generator, with the options
+  * Spark's CSV writer builds for the same write, into a part file in a
+  * hidden temp directory beside the target, and returns the file's name
+  * and row count. The driver then promotes exactly the returned parts:
+  * a file a failed or retried attempt left behind is never promoted. A
+  * failed write deletes the temp directory and leaves the old output as
+  * it was.
   */
 object LocalDestination {
 
@@ -32,47 +38,18 @@ object LocalDestination {
     else if (path.nonEmpty) Paths.get(baseDir, path)
     else Paths.get(baseDir)
 
-  /** Faithful single-file variant. Returns the reference-format report. */
+  /** Faithful single-file variant: the one-partition case of the
+    * multi-part write, whose single part is moved over `<table>.csv`.
+    * Returns the reference-format report.
+    */
   def write(df: DataFrame, tableName: String, path: String,
       baseDir: String): LoadReport = {
-    val dir = resolve(baseDir, path)
-    Files.createDirectories(dir)
-    val target = dir.resolve(s"$tableName.csv")
-    val tmp = Files.createTempFile(dir, s".$tableName-load", ".csv")
-    try {
-      val n = writeCsvFile(df, tmp)
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-      LoadReport(None, target.toString, n)
-    } finally Files.deleteIfExists(tmp)
-  }
-
-  /** Write `df` to `file` as one CSV file with a header, in one Spark
-    * job, and return its row count. The options are the ones Spark's
-    * CSV writer builds from `header=true` and `emptyValue=""`, so the
-    * bytes equal its part file's.
-    */
-  private def writeCsvFile(df: DataFrame, file: Path): Long = {
-    val one = df.coalesce(1)
-    val qe = one.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    val conf = qe.sparkSession.sessionState.conf
-    val opts = new CSVOptions(Map("header" -> "true", "emptyValue" -> ""),
-      conf.csvColumnPruning, conf.sessionLocalTimeZone,
-      conf.columnNameOfCorruptRecord)
-    val schema = one.schema
-    val out = file.toString
-    SQLExecution.withNewExecutionId(qe, Some("save")) {
-      qe.sparkSession.sparkContext.runJob(qe.executedPlan.execute(),
-        (_: TaskContext, it: Iterator[InternalRow]) => {
-          val gen = new UnivocityGenerator(schema, Files.newBufferedWriter(
-            Paths.get(out), Charset.forName(opts.charset)), opts)
-          try {
-            gen.writeHeaders()
-            var n = 0L
-            it.foreach { r => gen.write(r); n += 1 }
-            n
-          } finally gen.close()
-        }).sum
+    val target = resolve(baseDir, path).resolve(s"$tableName.csv")
+    val (_, n) = writeCsv(df.coalesce(1), target, header = true, gzip = false) {
+      (tmp, parts) =>
+        Files.move(tmp.resolve(parts.head), target, StandardCopyOption.REPLACE_EXISTING)
     }
+    LoadReport(None, target.toString, n)
   }
 
   /** Scale variant: parallel multi-part CSV directory per table. */
@@ -83,20 +60,95 @@ object LocalDestination {
     LoadReport(None, dir.toString, n)
   }
 
-  /** The CSV writer of every file sink: replace `dir` with the part
-    * files of `df` and return their names, sorted, and the row count.
-    * Empty cells are bare, like Python's `csv.writer`, not quoted `""`.
+  /** Replace `dir` with the part files of `df` and return their names,
+    * in partition order, and the row count. The old directory is
+    * renamed aside, the new one renamed in, then the old one deleted.
     */
   private[sync] def writeCsvParts(df: DataFrame, dir: Path, header: Boolean,
-      gzip: Boolean): (Seq[String], Long) = {
-    val n = LoadReport.countedWrite(df) { d =>
-      val w = d.write.mode("overwrite")
-        .option("header", header.toString).option("emptyValue", "")
-      (if (gzip) w.option("compression", "gzip") else w).csv(dir.toString)
+      gzip: Boolean): (Seq[String], Long) =
+    writeCsv(df, dir, header, gzip) { (tmp, _) =>
+      if (!Files.exists(dir, LinkOption.NOFOLLOW_LINKS)) Files.move(tmp, dir)
+      else {
+        val old = tmp.resolveSibling(s"${tmp.getFileName}-old")
+        Files.move(dir, old)
+        try Files.move(tmp, dir)
+        catch { case e: Throwable => Files.move(old, dir); throw e }
+        deleteTree(old)
+      }
     }
-    (withList(dir)(_.map(_.getFileName.toString)
-      .filter(_.startsWith("part-")).toSeq.sorted), n)
+
+  /** Write `df`'s partitions as CSV parts into a fresh hidden directory
+    * `.<target name>-load*` beside `target`, in one Spark job, then hand
+    * that directory and the parts' names to `promote`. The directory is
+    * deleted afterwards whatever happens. Empty cells are bare, like
+    * Python's `csv.writer`, not quoted `""`.
+    */
+  private def writeCsv(df: DataFrame, target: Path, header: Boolean,
+      gzip: Boolean)(promote: (Path, Seq[String]) => Unit): (Seq[String], Long) = {
+    val parent = Files.createDirectories(target.toAbsolutePath.getParent)
+    val tmp = Files.createTempDirectory(parent, s".${target.getFileName}-load")
+    try {
+      val parts = runParts(df, tmp, header, gzip)
+      val names = parts.map(_._1)
+      val keep = names.toSet
+      withList(tmp)(_.filterNot(p => keep(p.getFileName.toString)).toList)
+        .foreach(Files.delete)
+      promote(tmp, names)
+      (names, parts.map(_._2).sum)
+    } finally deleteTree(tmp)
   }
+
+  /** The job: each task writes `part-<partition>-<attempt>.csv[.gz]`
+    * into `out` and returns its name and row count. The options are the
+    * ones Spark's CSV writer builds from `header` and `emptyValue=""`,
+    * so a part's text equals Spark's part file for the same partition;
+    * gzip is the JDK's. Spark's writer rules hold: partition 0 always
+    * writes a file (with `header`, the header alone), other empty
+    * partitions write none, and a plan with no partitions runs as one
+    * empty partition.
+    */
+  private def runParts(df: DataFrame, out: Path, header: Boolean,
+      gzip: Boolean): Seq[(String, Long)] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    val spark = qe.sparkSession
+    val conf = spark.sessionState.conf
+    val schema = df.schema
+    DataSourceUtils.verifySchema(new CSVFileFormat, schema)
+    val opts = new CSVOptions(Map("header" -> header.toString, "emptyValue" -> ""),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+    val dir = out.toString
+    val ext = if (gzip) ".csv.gz" else ".csv"
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan.execute()
+      val rdd =
+        if (plan.partitions.nonEmpty) plan
+        else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      spark.sparkContext.runJob(rdd,
+        (ctx: TaskContext, it: Iterator[InternalRow]) =>
+          if (ctx.partitionId() != 0 && !it.hasNext) None
+          else {
+            val name = f"part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}$ext"
+            val os = Files.newOutputStream(Paths.get(dir, name))
+            val gen = new UnivocityGenerator(schema, new BufferedWriter(
+              new OutputStreamWriter(if (gzip) new GZIPOutputStream(os, 65536) else os,
+                Charset.forName(opts.charset))), opts)
+            try {
+              if (opts.headerFlag) gen.writeHeaders()
+              var n = 0L
+              it.foreach { r => gen.write(r); n += 1 }
+              Some(name -> n)
+            } finally gen.close()
+          }).toSeq.flatten
+    }
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.walk(p)
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally s.close()
+    }
 
   /** `Files.list` holds an open DirectoryStream — always close it. */
   private def withList[A](p: Path)(f: Iterator[Path] => A): A = {

@@ -15,7 +15,10 @@ import org.apache.spark.sql.DataFrame
   * parallel multi-part gzip CSV (every executor writes its partition),
   * and the generated COPY loads the whole prefix — both warehouses
   * ingest a file set in one statement, so staging stays distributed at
-  * any scale instead of funneling through one gzip stream. Files are
+  * any scale instead of funneling through one gzip stream. The stage is
+  * [[LocalDestination]]'s multi-part write: one Spark job whose parts
+  * land in a hidden temp directory that replaces the stage dir whole,
+  * so a failed load leaves the previous stage as it was. Files are
   * headerless like the reference's (`writer.writerows(iterator)` after
   * `next(iterator)` skips the header): COPY maps columns by position.
   *

@@ -61,4 +61,15 @@ object Bridge {
           "[graft] WARN: listener bus not drained after 120 s — " +
             "listener-derived metrics may be partial")
     }
+
+  /** Delete `dir` and everything under it when the JVM exits, by
+    * Spark's own shutdown-delete hook (the one that removes its local
+    * dirs) — `private[spark]`. Registering a path twice is a no-op.
+    */
+  def deleteAtExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
+  /** Whether [[deleteAtExit]] registered `dir`. */
+  def deletesAtExit(dir: java.io.File): Boolean =
+    org.apache.spark.util.ShutdownHookManager.hasShutdownDeleteDir(dir)
 }

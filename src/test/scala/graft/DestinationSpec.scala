@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -191,6 +191,86 @@ class DestinationSpec extends AnyFunSuite with TimeLimits {
     for (lines <- Seq(local.toSeq, dir)) {
       assert(lines.contains("0,") && lines.contains("10,"))
       assert(!lines.exists(_.contains("\"\"")), lines.take(3))
+    }
+  }
+
+  /** The three frames of the single-job case: all partitions empty, no
+    * partitions, and 3 partitions of 30 rows with blank cells.
+    */
+  private def writerFrames: Seq[(String, DataFrame)] = {
+    import spark.implicits._
+    val schema = StructType(Seq("id", "v").map(StructField(_, StringType)))
+    val multi = spark.range(0, 90, 1, 3).select($"id".cast("string").as("id"),
+      when($"id" % 10 === 0, lit("")).otherwise(concat(lit("v"), $"id")).as("v"))
+    Seq(("zero_rows", multi.filter($"id".cast("int") > 1000)),
+      ("zero_parts", spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)),
+      ("multi", multi))
+  }
+
+  private def text(p: Path): String = {
+    val in = Files.newInputStream(p)
+    val body =
+      if (p.toString.endsWith(".gz")) new java.util.zip.GZIPInputStream(in) else in
+    try new String(body.readAllBytes(), "UTF-8") finally body.close()
+  }
+
+  /** Partition index → decompressed text of every `part-` file in `dir`. */
+  private def partsByIndex(dir: Path): Map[Int, String] =
+    listNames(dir).filter(_.startsWith("part-"))
+      .map(n => n.substring(5, 10).toInt -> text(dir.resolve(n))).toMap
+
+  test("the multi-part sinks write the parts of Spark's CSV writer and nothing else") {
+    val base = Files.createTempDirectory("graft-parts")
+    for ((name, df) <- writerFrames) {
+      val sinks = Seq[(String, Boolean, () => Path)](
+        ("dir", true, () => Paths.get(LocalDestination
+          .writeDir(df, name, "dir", base.toString).target)),
+        ("dir_gz", true, () => Paths.get(LocalDestination
+          .writeDir(df, name, "dir_gz", base.toString, compress = true).target)),
+        ("stage", false, () => Paths.get(StagedCopy
+          .redshift(df, name, "", base.resolve("rs").toString, "b", "r").stageDir)))
+      for ((sink, header, call) <- sinks) {
+        val ref = base.resolve(s"spark_${name}_$header")
+        if (!Files.exists(ref))
+          df.write.option("header", header.toString).option("emptyValue", "")
+            .csv(ref.toString)
+        val out = call()
+        // no _SUCCESS, .crc, _temporary or temp entry
+        assert(listNames(out).forall(_.startsWith("part-")), s"$sink/$name")
+        val (got, want) = (partsByIndex(out), partsByIndex(ref))
+        assert(want.nonEmpty)
+        assert(got == want, s"$sink/$name")
+      }
+    }
+  }
+
+  test("a failed multi-part write keeps the old parts and leaves no temp directory") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val base = Files.createTempDirectory("graft-failed-parts")
+    val good = spark.range(0, 30, 1, 3).select($"id".cast("string").as("id"))
+    // row 1 fails to cast in the write's task, after row 0 is written
+    val bad = spark.range(0, 2, 1, 1).select(
+      when(col("id") === 1, lit("x")).otherwise(col("id").cast("string"))
+        .cast("int").as("id"))
+    val sinks = Seq[(String, DataFrame => String)](
+      "dir" -> (df => LocalDestination.writeDir(df, "snap", "dir",
+        base.toString).target),
+      "stage" -> (df => StagedCopy.redshift(df, "snap", "",
+        base.resolve("rs").toString, "b", "r").stageDir))
+    def parts(dir: Path): Seq[(String, Seq[Byte])] =
+      listNames(dir).filter(_.startsWith("part-"))
+        .map(n => n -> Files.readAllBytes(dir.resolve(n)).toSeq)
+    for ((sink, load) <- sinks) {
+      val dir = Paths.get(load(good))
+      val before = parts(dir)
+      assert(before.size == 3, sink)
+      val saved = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      try intercept[Exception](load(bad))
+      finally spark.conf.set("spark.sql.ansi.enabled", saved)
+      assert(parts(dir) == before, sink)
+      assert(listNames(dir.getParent) == Seq("snap"), sink)
     }
   }
 }

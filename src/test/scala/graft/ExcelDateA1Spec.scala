@@ -52,4 +52,37 @@ class ExcelDateA1Spec extends AnyFunSuite with PropHelpers {
       assert(A1Ref.colToInt(A1Ref.intToCol(n)) == n)
     }
   }
+
+  test("property: A1 parse equals the regex form on generated refs, errors included") {
+    import org.scalacheck.Gen
+    val RefPattern = "^([A-Z]+)([0-9]+)$".r
+    def byRegex(ref: String): (Int, Int) = ref.trim match {
+      case RefPattern(letters, digits) if digits.length <= 9 =>
+        (digits.toInt, A1Ref.colToInt(letters))
+      case other => throw new IllegalArgumentException(s"not an A1 ref: '$other'")
+    }
+    def outcome(f: => (Int, Int)): Either[String, (Int, Int)] =
+      try Right(f) catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    val pad = Gen.oneOf("", " ", "\t", "\n ", "\u0000")
+    def run(cs: Seq[Char], lo: Int, hi: Int) =
+      Gen.choose(lo, hi).flatMap(Gen.listOfN(_, Gen.oneOf(cs))).map(_.mkString)
+    // well-formed-ish: letters then digits, around the 6-letter and
+    // 9-digit bounds, with stray characters spliced in
+    val shaped = for {
+      l <- pad; letters <- run("ABXYZ", 0, 8); digits <- run("0189", 0, 11)
+      junk <- Gen.oneOf("", "", "", "a", "$", "-", "1A", " ", "\u0660")
+      at <- Gen.choose(0, 2); r <- pad
+    } yield {
+      val parts = Array(letters, digits, "")
+      parts(at) = parts(at) + junk
+      l + parts.mkString + r
+    }
+    val noise = run("AZaz09 $:\t\u00c4", 0, 12)
+    forAll(Gen.frequency(4 -> shaped, 1 -> noise), n = 5000) { ref =>
+      assert(outcome(A1Ref.parse(ref)) == outcome(byRegex(ref)), s"'$ref'")
+    }
+    for (ref <- Seq("A1", " XFD1048576 ", "ABCDEF999999999", "ABCDEFG1",
+        "A1234567890", "A", "1", "", "a1", "A1A", "A-1"))
+      assert(outcome(A1Ref.parse(ref)) == outcome(byRegex(ref)), s"'$ref'")
+  }
 }

@@ -94,4 +94,26 @@ class TablesSpec extends AnyFunSuite {
     val files = try st.iterator().asScala.toList finally st.close()
     assert(files.exists(_.getFileName.toString.endsWith(".parquet")))
   }
+
+  test("a scratch dir is deleted at JVM exit and holds a whole standing index") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.graftshim.Bridge
+    val tp = "graft_scratch_exit"
+    val dir = Tables.scratchDir(spark, tp)
+    assert(Bridge.deletesAtExit(dir.toFile))
+    // a standing index given the dir as its pathPrefix writes inside it
+    try {
+      graft.ops.TextDedup.writePrefixIndex(
+        Seq((0L, "a b c d"), (1L, "a b c e")).toDF("doc_id", "text"),
+        "doc_id", "text", tp, buckets = 2, pathPrefix = Some(dir.toString))
+      def names(p: java.nio.file.Path) = {
+        val st = java.nio.file.Files.list(p)
+        try st.iterator().asScala.map(_.getFileName.toString).toList finally st.close()
+      }
+      assert(names(dir).sorted == Seq("meta", "pref", "rank", "sh"))
+      assert(!names(dir.getParent).exists(_.startsWith(s"${dir.getFileName}_")))
+    } finally Seq("_rank", "_pref", "_sh", "_meta").foreach(sfx =>
+      spark.sql(s"DROP TABLE IF EXISTS $tp$sfx"))
+  }
 }
