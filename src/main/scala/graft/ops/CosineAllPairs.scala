@@ -265,10 +265,7 @@ object CosineAllPairs {
       threshold: Double = 0.8,
       handle: CacheHandle = null,
       maxPrefixPosting: Int = Int.MaxValue): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    TextDedup.requirePairArgs(threshold, maxPrefixPosting)
     val tf = CacheHandle.persistWith(handle,
       TextDedup.shingles(corpus, idCol, textCol, shingleN, dedup = false)
         .select(lit(0).as("__side"), col(idCol), col("shingle"))
@@ -422,10 +419,7 @@ object CosineAllPairs {
       maxPrefixPosting: Int = Int.MaxValue,
       shardBy: Int = 0,
       handle: CacheHandle = null): Unit = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    TextDedup.requirePairArgs(threshold, maxPrefixPosting)
     val idx = StandingIndex.build(corpus.sparkSession, tablePrefix,
       pathPrefix, StandingIndex.Meta(threshold, shingleN, buckets, shardBy))
     val tf = CacheHandle.persistWith(handle,
@@ -546,10 +540,7 @@ object CosineAllPairs {
       threshold: Double = 0.8,
       handle: CacheHandle = null,
       maxPrefixPosting: Int = Int.MaxValue): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    TextDedup.requirePairArgs(threshold, maxPrefixPosting)
     val idx = StandingIndex.forRead(spark, tablePrefix,
       "CosineAllPairs.pairsAgainstIndexed", threshold, shingleN)
     val btf = CacheHandle.persistWith(handle,

@@ -924,6 +924,19 @@ object TextDedup {
           col("__c.len") * 2)).as("fp")): _*)
   }
 
+  /** The argument check the cross-side and indexed pair ops
+    * (`prefixJaccardAgainst`, `writePrefixIndex`,
+    * `prefixJaccardAgainstIndexed` and their `CosineAllPairs` twins)
+    * open with: the threshold first, then the posting bound.
+    */
+  private[ops] def requirePairArgs(
+      threshold: Double, maxPrefixPosting: Int): Unit = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold in (0, 1], got $threshold")
+    require(maxPrefixPosting > 0,
+      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+  }
+
   /** Nightly-incremental PPJoin — tonight's `batch` exactly
     * threshold-joined against the standing `corpus` (the
     * q_dedup_incremental / q_cdc_chunks_incr shape at EXACT-Jaccard
@@ -957,10 +970,7 @@ object TextDedup {
       threshold: Double = 0.8,
       handle: CacheHandle = null,
       maxPrefixPosting: Int = Int.MaxValue): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    requirePairArgs(threshold, maxPrefixPosting)
     val sh = CacheHandle.persistWith(handle,
       shingles(corpus, idCol, textCol, shingleN)
         .select(lit(0).as("__side"), col(idCol), col("shingle"))
@@ -1096,10 +1106,7 @@ object TextDedup {
       maxPrefixPosting: Int = Int.MaxValue,
       shardBy: Int = 0,
       handle: CacheHandle = null): Unit = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    requirePairArgs(threshold, maxPrefixPosting)
     val idx = StandingIndex.build(corpus.sparkSession, tablePrefix,
       pathPrefix, StandingIndex.Meta(threshold, shingleN, buckets, shardBy))
     val sh = CacheHandle.persistWith(handle,
@@ -1198,10 +1205,7 @@ object TextDedup {
       threshold: Double = 0.8,
       handle: CacheHandle = null,
       maxPrefixPosting: Int = Int.MaxValue): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold in (0, 1], got $threshold")
-    require(maxPrefixPosting > 0,
-      s"maxPrefixPosting must be positive, got $maxPrefixPosting")
+    requirePairArgs(threshold, maxPrefixPosting)
     val idx = StandingIndex.forRead(spark, tablePrefix,
       "prefixJaccardAgainstIndexed", threshold, shingleN)
     val bsh = CacheHandle.persistWith(handle,

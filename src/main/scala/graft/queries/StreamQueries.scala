@@ -1679,18 +1679,9 @@ object StreamQueries {
     // the batch LSH pair miner over the same literal planes — the
     // stream must reproduce exactly this pair set
     "q_stream_ann" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             ${VectorQueries.lshBucketSql} AS bucket FROM e)
-             WHERE nrm > 0)
-         SELECT a.vec_id AS a, b.vec_id AS b,
-           round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cos_r
-         FROM n a JOIN n b
-           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 >= 0.2
+      s"""WITH ${VectorQueries.embeddingCtes("vec_id < 300",
+          nCols = Seq(VectorQueries.lshBucket))}
+         ${VectorQueries.lshPairSql(Seq(VectorQueries.pairCos))}
          ORDER BY a, b""",
     // same 300 s epoch buckets the tumbling window aligns to
     "q_stream_trending" ->
@@ -1841,34 +1832,16 @@ object StreamQueries {
     // quantizer chain as q_ann_ivf's oracle, probe cells ≥ 0.0,
     // verify ≥ 0.2
     "q_stream_ivf" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-             WHERE vec_id < 16),
-         scored AS (SELECT x.vec_id, x.v, x.nrm, c.c_id,
-             round(list_dot_product(x.v, c.cv) / (x.nrm * c.cn), 6) + 0.0
-               AS c_cos
-             FROM n x CROSS JOIN cent c WHERE x.vec_id >= 16),
-         assigned AS (SELECT vec_id, v, nrm, c_id AS cell FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rk
-             FROM scored) WHERE rk = 1),
-         qe AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id >= 450 AND vec_id < 500),
-         qn AS (SELECT * FROM (SELECT vec_id AS q_id, v AS qv,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS qnn
-             FROM qe) WHERE qnn > 0),
-         probe AS (SELECT q.q_id, q.qv, q.qnn, c.c_id AS cell
+      s"""WITH ${VectorQueries.ivfCtes("vec_id < 2000")},
+         ${VectorQueries.embeddingCtes("vec_id >= 450 AND vec_id < 500",
+           e = "qe", n = "qn")},
+         probe AS (SELECT q.vec_id AS q_id, q.v AS qv, q.nrm AS qnn,
+             c.c_id AS cell
            FROM qn q CROSS JOIN cent c
-           WHERE round(list_dot_product(q.qv, c.cv) / (q.qnn * c.cn), 6) + 0.0
+           WHERE ${VectorQueries.cosSql("q.v", "c.cv", "q.nrm", "c.cn")}
              >= 0.0),
          m AS (SELECT p.q_id, a.vec_id AS cand_id, p.cell,
-             round(list_dot_product(p.qv, a.v) / (p.qnn * a.nrm), 6) + 0.0
+             ${VectorQueries.cosSql("p.qv", "a.v", "p.qnn", "a.nrm")}
                AS cos_r
            FROM probe p JOIN assigned a ON a.cell = p.cell
            WHERE a.vec_id < 450)

@@ -56,6 +56,22 @@ object VectorQueries {
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", norm(col("v"))).filter(col("nrm") > 0)
 
+  /** The normalized embedding slice (vec_id, `cols`…, v, nrm) over
+    * vec_id < `below` — the Spark side of [[embeddingCtes]].
+    */
+  private def normed(s: SparkSession, dir: String, below: Int,
+      cols: String*): DataFrame =
+    withNorm(emb(s, dir).filter(col("vec_id") < below)
+      .select((col("vec_id") +: cols.map(col)) :+
+        asDouble(col("embedding")).as("v"): _*))
+
+  /** `df` with its seeded-plane LSH bucket (8 planes over the 64 dims
+    * of v) — the Spark side of [[lshBucket]].
+    */
+  private def withLshBucket(df: DataFrame): DataFrame =
+    df.withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"),
+      graft.ops.CosineLsh.planes(k = 8, dim = 64)))
+
   private def signBucket(v: Column, bits: Int): Column =
     (0 until bits)
       .map(i => when(element_at(v, i + 1) >= 0d, lit(1 << i)).otherwise(lit(0)))
@@ -92,10 +108,7 @@ object VectorQueries {
     * bucket) and the verified pairs (a, b, bucket, cos_r).
     */
   private def lshPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
-    val e = withNorm(emb(s, dir).filter(col("vec_id") < 300)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-      .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm))
+    val e = normed(s, dir, 300).transform(withLshBucket)
       .transform(graft.ops.QueryCaches.persist) // both self-join sides (and cluster id universe) read it
     // Uncapped, mirroring the DuckDB oracle (which mines every bucket):
     // gate queries must match the oracle exactly, so the hot-bucket
@@ -117,13 +130,12 @@ object VectorQueries {
   /** Fixed-centroid IVF assignment (first 16 vectors as the coarse
     * quantizer): every vector with vec_id >= 16 labeled with its
     * nearest centroid's cell. ONE definition shared by q_ann_ivf
-    * (in-memory) and q_ann_ivf_persisted (save → cold-load lifecycle)
-    * so the assignment rule — and therefore the shared oracle — cannot
-    * drift between the two.
+    * (in-memory), q_ann_ivf_persisted (save → cold-load lifecycle),
+    * q_ivf_stats and q_stream_ivf, so the assignment rule cannot
+    * drift between them; its oracle side is [[ivfCtes]].
     */
   private[queries] def ivfFixedAssigned(s: SparkSession, dir: String): DataFrame = {
-    val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+    val e = normed(s, dir, 2000)
     val cent = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("c_id"), col("v").as("cv"),
         col("nrm").as("cn"))
@@ -143,12 +155,63 @@ object VectorQueries {
     */
   private def fixedCentroids(
       s: SparkSession, dir: String): Array[(Int, Array[Double])] =
-    withNorm(emb(s, dir).filter(col("vec_id") < 16)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+    normed(s, dir, 16)
       .select(col("vec_id").cast("int").as("c_id"), col("v"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
+
+  /** Semantic-dedup cells (id, v, nrm, cell) over every vector, the
+    * first 8 as fixed centroids — shared by q_semantic_dedup and its
+    * capped twin; the oracle side is [[ivfCtes]] at k = 8.
+    */
+  private def semanticCells(s: SparkSession, dir: String): DataFrame = {
+    val n = withNorm(emb(s, dir)
+      .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+    val cent = n.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"),
+        col("nrm").as("cn"))
+    graft.ops.SemanticDedup.assignCells(
+      n.filter(col("vec_id") >= 8)
+        .select(col("vec_id").as("id"), col("v"), col("nrm")),
+      cent)
+  }
+
+  /** Every candidate (vec_id >= 10) of the 2000-vector slice scored
+    * against the 10 query vectors (q_id, qv, qn, cand_id, cv, cn,
+    * cos_r) — the brute-force top-k input of q_ann_topk and
+    * q_topk_agg.
+    */
+  private def top10Scored(s: SparkSession, dir: String): DataFrame = {
+    val e = normed(s, dir, 2000)
+      .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    val c = e.filter(col("vec_id") >= 10)
+      .select(col("vec_id").as("cand_id"), col("v").as("cv"),
+        col("nrm").as("cn"))
+    c.join(broadcast(q))
+      .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
+  }
+
+  /** [[top10Scored]]'s pairs with each side's seeded-plane LSH bucket
+    * (qb, cb), persisted: q_ann_ndcg and q_ann_recall rank it exactly
+    * and per bucket rule. Oracle side: [[lshScoredCtes]].
+    */
+  private def lshScored(s: SparkSession, dir: String): DataFrame = {
+    val e = normed(s, dir, 2000).transform(withLshBucket)
+      .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("nrm").as("qn"), col("bucket").as("qb"))
+    val c = e.filter(col("vec_id") >= 10)
+      .select(col("vec_id").as("cand_id"), col("v").as("cv"),
+        col("nrm").as("cn"), col("bucket").as("cb"))
+    c.join(broadcast(q))
+      .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
+      .transform(graft.ops.QueryCaches.persist) // the exact and LSH rankings read it
+  }
 
   /** Own-cell (nprobe=1) nearest neighbor over an IVF assignment
     * (vec_id, v, nrm, cell): queries (vec_id < 66) join candidates
@@ -256,8 +319,7 @@ object VectorQueries {
     // Embedding-cosine near-dup: all pairs above threshold (bounded
     // brute force — the exhaustive baseline).
     "q_cosine_pairs" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 300)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 300)
         .transform(graft.ops.QueryCaches.persist) // both self-join sides read it
       val a = e.select(col("vec_id").as("a"), col("v").as("va"),
         col("nrm").as("na"))
@@ -272,19 +334,9 @@ object VectorQueries {
 
     // Brute-force cosine top-k: 3 nearest candidates per query vector.
     "q_ann_topk" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-        .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val c = e.filter(col("vec_id") >= 10)
-        .select(col("vec_id").as("cand_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("cos_r").desc, col("cand_id"))
-      c.join(broadcast(q))
-        .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
+      top10Scored(s, dir)
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("q_id"), col("cand_id"), col("rank"), col("cos_r"))
@@ -299,19 +351,8 @@ object VectorQueries {
     // tells you to re-train centroids or raise k. One broadcast
     // assignment pass + one keyed aggregate.
     "q_ivf_stats" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-      val cent = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      val aw = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-      val assigned = e.filter(col("vec_id") >= 16)
-        .join(broadcast(cent))
-        .withColumn("c_cos", cosR(col("v"), col("cv"), col("nrm"), col("cn")))
-        .withColumn("rk", row_number().over(aw))
-        .filter(col("rk") === 1)
-        .select(col("vec_id"), col("c_id").as("cell"))
+      val assigned = ivfFixedAssigned(s, dir)
+        .select(col("vec_id"), col("cell"))
         .transform(graft.ops.QueryCaches.persist) // total + per-cell agg
       assigned.count() // eager: broadcast(total) re-ran the whole assignment
       val total = assigned.agg(count(lit(1)).as("n_total"))
@@ -477,17 +518,7 @@ object VectorQueries {
     // 10⁹ candidates only k-element buffers cross the wire. Verified
     // against the window-rank idiom's oracle.
     "q_topk_agg" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-        .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val c = e.filter(col("vec_id") >= 10)
-        .select(col("vec_id").as("cand_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      c.join(broadcast(q))
-        .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
+      top10Scored(s, dir)
         .groupBy("q_id")
         .agg(graft.expr.TopKByScore.topK(col("cos_r"), col("cand_id"), 3)
           .as("nb"))
@@ -502,14 +533,9 @@ object VectorQueries {
     // seeded ±1 planes — reproducible across sessions/retries with no
     // stored model — 8 sign bits → 256 buckets, nearest same-bucket
     // neighbor. Oracle-exact: the plane matrix is literal on both sides.
-    "q_ann_lsh" -> ((s, dir) => {
-      val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
-      nearestInBucket(
-        withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-          .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-          .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm)),
-        queryCap = 50)
-    }),
+    "q_ann_lsh" -> ((s, dir) =>
+      nearestInBucket(normed(s, dir, 2000).transform(withLshBucket),
+        queryCap = 50)),
 
     // Filtered vector search — top-3 bucket-local neighbors among
     // candidates passing a metadata predicate (even labels), with the
@@ -519,11 +545,7 @@ object VectorQueries {
     // fewer than k). Same LSH machinery and rank tiebreak as
     // q_ann_lsh.
     "q_ann_filtered" -> ((s, dir) => {
-      val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
-      val base = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), col("label"),
-          asDouble(col("embedding")).as("v")))
-        .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm))
+      val base = normed(s, dir, 2000, "label").transform(withLshBucket)
         .transform(graft.ops.QueryCaches.persist) // query + candidate arms
       val q = base.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -611,11 +633,8 @@ object VectorQueries {
     // join that degenerates to all-pairs. Probe buckets of one query
     // are distinct (bucket XOR distinct masks), so no pair duplicates.
     "q_ann_multiprobe" -> ((s, dir) => {
-      val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
       val masks = lit(0) +: (0 until 8).map(p => lit(1 << p))
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-        .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm))
+      val e = normed(s, dir, 2000).transform(withLshBucket)
         .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
       val q = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -640,8 +659,7 @@ object VectorQueries {
     // (axis hyperplanes keep this variant's oracle trivially exact).
     "q_ann_bucketed" -> ((s, dir) =>
       nearestInBucket(
-        withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-          .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+        normed(s, dir, 2000)
           .withColumn("bucket", signBucket(col("v"), 8)),
         queryCap = 50)),
 
@@ -652,16 +670,7 @@ object VectorQueries {
     // embed-alike documents the fingerprint dedup family cannot; pair
     // mining is cell-local, never all-pairs.
     "q_semantic_dedup" -> ((s, dir) => {
-      val n = withNorm(emb(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-      val cent = n.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      val assigned = graft.ops.SemanticDedup.assignCells(
-        n.filter(col("vec_id") >= 8)
-          .select(col("vec_id").as("id"), col("v"), col("nrm")),
-        cent)
-      graft.ops.SemanticDedup.keepSet(assigned, tau = 0.3)
+      graft.ops.SemanticDedup.keepSet(semanticCells(s, dir), tau = 0.3)
         .select(col("id").as("vec_id"), col("cell"))
         .orderBy("vec_id")
     }),
@@ -674,16 +683,7 @@ object VectorQueries {
     // result hash-matches the same uncapped oracle; the explicit
     // require names a regeneration that breaks the precondition.
     "q_semantic_dedup_capped" -> ((s, dir) => {
-      val n = withNorm(emb(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-      val cent = n.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      val assigned = graft.ops.QueryCaches.persist(
-        graft.ops.SemanticDedup.assignCells(
-          n.filter(col("vec_id") >= 8)
-            .select(col("vec_id").as("id"), col("v"), col("nrm")),
-          cent))
+      val assigned = graft.ops.QueryCaches.persist(semanticCells(s, dir))
       val cap = 4096
       require(
         graft.ops.TextDedup.overCapBuckets(assigned, Seq("cell"), cap)
@@ -696,11 +696,6 @@ object VectorQueries {
         .orderBy("vec_id")
     }),
 
-    // Int8 scalar quantization: the storage path for embeddings at
-    // 100 TB (4 bytes→1 per dim). Per-vector symmetric scale, codes
-    // via floor(x/s + 0.5) (exact on both engines, unlike round()'s
-    // mode-dependent halves); output = code stats + saturation count.
-    // Pure per-row projection, no shuffle.
     // Product quantization: every 64-dim vector compressed to 8
     // per-subspace codes against a hash-seeded 16-centroid codebook
     // (ProductQuantizer — broadcast-joined bounded codebook, map-side
@@ -753,6 +748,11 @@ object VectorQueries {
             6))
     }),
 
+    // Int8 scalar quantization: the storage path for embeddings at
+    // 100 TB (4 bytes→1 per dim). Per-vector symmetric scale, codes
+    // via floor(x/s + 0.5) (exact on both engines, unlike round()'s
+    // mode-dependent halves); output = code stats + saturation count.
+    // Pure per-row projection, no shuffle.
     "q_quantize_embed" -> ((s, dir) => {
       val vf = graft.expr.VectorFunctions
       emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -810,20 +810,7 @@ object VectorQueries {
     // cross-engine because positions derive from the same rounded
     // cosine total order.
     "q_ann_ndcg" -> ((s, dir) => {
-      val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-        .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm))
-        .transform(graft.ops.QueryCaches.persist)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"), col("bucket").as("qb"))
-      val c = e.filter(col("vec_id") >= 10)
-        .select(col("vec_id").as("cand_id"), col("v").as("cv"),
-          col("nrm").as("cn"), col("bucket").as("cb"))
-      val scored = c.join(broadcast(q))
-        .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
-        .transform(graft.ops.QueryCaches.persist) // exact + LSH read it
+      val scored = lshScored(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("cos_r").desc, col("cand_id"))
       val exact5 = scored.withColumn("rk", row_number().over(w))
@@ -847,20 +834,7 @@ object VectorQueries {
     }),
 
     "q_ann_recall" -> ((s, dir) => {
-      val pm = graft.ops.CosineLsh.planes(k = 8, dim = 64)
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-        .withColumn("bucket", graft.ops.CosineLsh.bucketCol(col("v"), pm))
-        .transform(graft.ops.QueryCaches.persist) // query and candidate sides share it
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"), col("bucket").as("qb"))
-      val c = e.filter(col("vec_id") >= 10)
-        .select(col("vec_id").as("cand_id"), col("v").as("cv"),
-          col("nrm").as("cn"), col("bucket").as("cb"))
-      val scored = c.join(broadcast(q))
-        .withColumn("cos_r", cosR(col("qv"), col("cv"), col("qn"), col("cn")))
-        .transform(graft.ops.QueryCaches.persist) // exact and both LSH rankings read it
+      val scored = lshScored(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("cos_r").desc, col("cand_id"))
       def top3(df: DataFrame): DataFrame = df
@@ -899,8 +873,7 @@ object VectorQueries {
     // At scale stage 1 scans 4× less data per candidate and stage 2
     // touches 10 rows per query.
     "q_ann_rerank" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 2000)
         .withColumn("p", slice(col("v"), 1, 16))
         .withColumn("pn", norm(col("p")))
         .filter(col("pn") > 0)
@@ -946,8 +919,7 @@ object VectorQueries {
         .orderBy(col("score_r").desc, col("doc_id"))
       val lex = lexTop.select(col("doc_id"),
         row_number().over(wl).cast("long").as("lex_rank"))
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 2000)
         .transform(graft.ops.QueryCaches.persist) // query + candidate arms share it
       val q = e.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -986,8 +958,7 @@ object VectorQueries {
     // binary is 0.30000000000000004, NOT the 0.3 literal — computing
     // it would diverge from the oracle's digits).
     "q_mmr" -> ((s, dir) => {
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 2000)
         .transform(graft.ops.QueryCaches.persist)
       val cand = e.filter(col("vec_id") >= 10)
         .join(broadcast(e.filter(col("vec_id") === 0)
@@ -1042,8 +1013,7 @@ object VectorQueries {
         .orderBy(col("score_r").desc, col("doc_id"))
       val lex = lexTop.select(col("doc_id"), col("score_r"),
         row_number().over(wl).cast("long").as("lex_rank"))
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 2000)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 2000)
         .transform(graft.ops.QueryCaches.persist) // query row + lookup side share it
       // aggregate the query row into EXACTLY ONE row (nulls when
       // vec_id 0 is absent or zero-norm): a bare filter would make the
@@ -1077,8 +1047,7 @@ object VectorQueries {
     // by the slice literal.
     "q_rand_proj" -> ((s, dir) => {
       val planes = graft.ops.CosineLsh.planes(16, 64)
-      val e = withNorm(emb(s, dir).filter(col("vec_id") < 120)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      val e = normed(s, dir, 120)
         .withColumn("p", array(planes.map(pl =>
           dot(col("v"), array(pl.map(x => lit(x)).toIndexedSeq: _*)))
           .toIndexedSeq: _*))
@@ -1104,12 +1073,11 @@ object VectorQueries {
   // The ±1 plane matrix is deterministic in (seed, k, dim), so the
   // oracle embeds it as literals — both engines hash the identical
   // doubles (same left-to-right dot-product fold).
-  // shared with StreamQueries' streaming-ANN oracle (same package).
   // Only the k=8 matrix is ever rendered to SQL: smaller-k buckets
   // derive as low-bit prefixes (qb % 16 in q_ann_recall) because the
   // planes are tabulated by index — a separate k=4 literal would be a
   // second source of truth for the same buckets
-  private[queries] val lshBucketSql = graft.ops.CosineLsh.planes(8, 64)
+  private val lshBucketSql = graft.ops.CosineLsh.planes(8, 64)
     .zipWithIndex
     .map { case (plane, p) =>
       val arr = plane.map(x => if (x > 0) "1.0" else "-1.0")
@@ -1117,62 +1085,121 @@ object VectorQueries {
       s"(CASE WHEN list_dot_product(v, $arr) >= 0 THEN ${1 << p} ELSE 0 END)"
     }.mkString(" + ")
 
-  // One definition for the top-3-per-query result: q_ann_topk derives
-  // it via the window-rank idiom, q_topk_agg via the heap aggregate —
-  // both must produce exactly this, so they share the oracle text.
-  private val topk3Oracle =
-    """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-           FROM n q JOIN n c ON c.vec_id >= 10
-           WHERE q.vec_id < 10),
-         r AS (SELECT *, CAST(row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS BIGINT) AS rank
-           FROM p)
-         SELECT q_id, cand_id, rank, cos_r FROM r WHERE rank <= 3
-         ORDER BY q_id, rank"""
+  /** The seeded-plane LSH bucket as an [[embeddingCtes]] `nCols`
+    * entry — the oracle side of `CosineLsh.bucketCol` over `planes(8,
+    * 64)`; shared with StreamQueries' streaming-ANN oracle.
+    */
+  private[queries] val lshBucket = s"$lshBucketSql AS bucket"
 
-  // One definition of the fixed-centroid IVF search result: q_ann_ivf
-  // computes it in memory, q_ann_ivf_persisted through the save →
-  // cold-load disk round trip — both must match exactly this.
-  private val ivfOracle =
-    """WITH e AS (SELECT vec_id,
+  /** The embedding slice as DuckDB CTEs — the oracle side of [[normed]]
+    * (and of every body that casts `embedding` with `asDouble`). `e`
+    * holds (vec_id, `cols`…, v): the `embeddings` rows matching the
+    * predicate `slice` (every row when empty), v the embedding cast to
+    * DOUBLE element-wise. With `norm`, `n` adds nrm, the L2 norm, drops
+    * zero-norm rows as [[withNorm]] does, and appends the `nCols`
+    * expressions over v ([[lshBucket]], a prefix slice). `e` and `n`
+    * name the two CTEs.
+    */
+  private[queries] def embeddingCtes(slice: String = "",
+      cols: Seq[String] = Nil, norm: Boolean = true,
+      nCols: Seq[String] = Nil, e: String = "e", n: String = "n"): String = {
+    val pre = cols.map(c => s" $c,").mkString
+    val where = if (slice.isEmpty) "" else s" WHERE $slice"
+    val eCte = s"""$e AS (SELECT vec_id,$pre
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
+           FROM embeddings$where)"""
+    val extra = nCols.map(c => s",\n             $c").mkString
+    if (!norm) eCte
+    else s"""$eCte,
+         $n AS (SELECT * FROM (SELECT vec_id,$pre v,
+             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm$extra FROM $e)
+             WHERE nrm > 0)"""
+  }
+
+  /** The rounded cosine in DuckDB — the oracle side of [[cosR]], with
+    * the same arguments (two vectors, then their norms). The
+    * two-argument form reads CTE aliases `a` and `b`'s v and nrm.
+    */
+  private[queries] def cosSql(a: String, b: String, na: String,
+      nb: String): String =
+    s"round(list_dot_product($a, $b) / ($na * $nb), 6) + 0.0"
+
+  private[queries] def cosSql(a: String, b: String): String =
+    cosSql(s"$a.v", s"$b.v", s"$a.nrm", s"$b.nrm")
+
+  /** Per-query rank by rounded cosine, ties to the lower candidate id
+    * — the order of every body's `partitionBy("q_id")
+    * .orderBy(col("cos_r").desc, col("cand_id"))` window.
+    */
+  private val qRank =
+    "row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, cand_id)"
+
+  /** The nearest candidate per query over a pair CTE `p` (q_id,
+    * cand_id, `key`, cos_r) — the oracle side of the rank-1 tail of
+    * [[nearestInBucket]] and [[ivfOwnCellSearch]].
+    */
+  private def nearestSql(key: String): String =
+    s"""r AS (SELECT *, $qRank AS rk FROM p)
+         SELECT q_id, cand_id, $key, cos_r FROM r WHERE rk = 1
+         ORDER BY q_id"""
+
+  /** [[nearestInBucket]]'s oracle: the first 50 of the 2000-vector
+    * slice search their own bucket, `bucket` the `n` column that
+    * derives it.
+    */
+  private def bucketNearestOracle(bucket: String): String =
+    s"""WITH ${embeddingCtes("vec_id < 2000", nCols = Seq(bucket))},
+         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.bucket,
+             ${cosSql("q", "c")} AS cos_r
+           FROM n q JOIN n c
+             ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
+           WHERE q.vec_id < 50),
+         ${nearestSql("bucket")}"""
+
+  /** The LSH near-dup pair SELECT over the bucketed CTE `n`: every
+    * a < b sharing a bucket with rounded cosine >= 0.2, the `cols`
+    * expressions following a and b — the oracle side of [[lshPairs]]
+    * and of `StreamAnn.candidatePairs`.
+    */
+  private[queries] def lshPairSql(cols: Seq[String] = Nil,
+      n: String = "n"): String =
+    s"""SELECT a.vec_id AS a, b.vec_id AS b${cols.map(", " + _).mkString}
+         FROM $n a JOIN $n b
+           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+         WHERE ${cosSql("a", "b")} >= 0.2"""
+
+  /** [[lshPairSql]]'s cosine column. */
+  private[queries] val pairCos = s"${cosSql("a", "b")} AS cos_r"
+
+  /** The fixed-centroid IVF assignment chain over
+    * [[embeddingCtes]]`(slice)` — the oracle side of
+    * [[ivfFixedAssigned]] (k = 16 over the 2000 slice) and of
+    * [[semanticCells]] (k = 8 over every vector). `cent` holds the
+    * first `k` vectors as centroids, `scored` every other vector's
+    * rounded cosine to each, and `assigned` (vec_id, v, nrm, cell) its
+    * best cell, ties to the lower centroid id.
+    */
+  private[queries] def ivfCtes(slice: String, k: Int = 16): String =
+    s"""${embeddingCtes(slice)},
          cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-             WHERE vec_id < 16),
+             WHERE vec_id < $k),
          scored AS (SELECT x.vec_id, x.v, x.nrm, c.c_id,
-             round(list_dot_product(x.v, c.cv) / (x.nrm * c.cn), 6) + 0.0 AS c_cos
-             FROM n x CROSS JOIN cent c WHERE x.vec_id >= 16),
+             ${cosSql("x.v", "c.cv", "x.nrm", "c.cn")} AS c_cos
+             FROM n x CROSS JOIN cent c WHERE x.vec_id >= $k),
          assigned AS (SELECT vec_id, v, nrm, c_id AS cell FROM (
              SELECT *, row_number() OVER
                (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rk
-             FROM scored) WHERE rk = 1),
-         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.cell,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-             FROM assigned q JOIN assigned c
-               ON q.cell = c.cell AND q.vec_id <> c.vec_id
-             WHERE q.vec_id < 66),
-         r AS (SELECT *, row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS rk FROM p)
-         SELECT q_id, cand_id, cell, cos_r FROM r WHERE rk = 1
-         ORDER BY q_id"""
+             FROM scored) WHERE rk = 1)"""
 
-  /** Unrolled Lloyd oracle for q_kmeans_exact: each iteration's
-    * distance/argmin/update mirrors the Spark side's decimal-exact
-    * aggregates (terms and coordinate sums through DECIMAL(28,14)).
+  /** Lloyd round `i` as CTEs over the exploded `x` (vec_id, x, pos)
+    * and the previous round's centroids `c${i - 1}` (cid, pos, cx):
+    * `d$i` the DECIMAL(28,14) squared distances, `a$i` each vector's
+    * argmin (ties to the lower cid), `c$i` the decimal-exact means —
+    * the oracle side of q_kmeans_exact's loop and of
+    * `IvfIndex.buildExact`.
     */
-  private val kmeansOracle: String = {
-    def iter(i: Int) =
-      s"""d$i AS (SELECT x.vec_id, c.cid,
+  private def lloydCtes(i: Int): String =
+    s"""d$i AS (SELECT x.vec_id, c.cid,
              sum(CAST((x.x - c.cx) * (x.x - c.cx) AS DECIMAL(28,14)))
                AS d
            FROM x JOIN c${i - 1} c ON c.pos = x.pos GROUP BY 1, 2),
@@ -1184,15 +1211,154 @@ object VectorQueries {
              CAST(sum(CAST(x.x AS DECIMAL(28,14))) AS DOUBLE) /
                count(*) AS cx
            FROM x JOIN a$i a ON a.vec_id = x.vec_id GROUP BY 1, 2)"""
-    s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 500),
+
+  /** Product-quantizer code search as CTEs over a base CTE `base`
+    * (vec_id, v) — the oracle side of `ProductQuantizer.pqCodes`:
+    * `seeds` the 16 codebook vectors in md5('pq:' || id) order, `sb`
+    * the 8 subspaces, `ve`/`ce` the 8-dim slices of vectors and
+    * seeds, `d` every (vector, subspace, seed) squared distance.
+    */
+  private def pqCodeCtes(base: String): String =
+    s"""seeds AS (SELECT vec_id AS cid, v AS cv FROM $base
+           ORDER BY md5('pq:' || CAST(vec_id AS VARCHAR)), vec_id
+           LIMIT 16),
+         sb AS (SELECT unnest(range(0, 8)) AS sub),
+         ve AS (SELECT vec_id, sub,
+             v[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
+               AS vs
+           FROM $base CROSS JOIN sb),
+         ce AS (SELECT cid, sub,
+             cv[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
+               AS cs
+           FROM seeds CROSS JOIN sb),
+         d AS (SELECT ve.vec_id, ve.sub, ce.cid,
+             (list_dot_product(vs, vs) - 2.0 * list_dot_product(vs, cs))
+               + list_dot_product(cs, cs) AS dist
+           FROM ve JOIN ce ON ve.sub = ce.sub)"""
+
+  /** [[pqCodeCtes]] plus `codes`, each vector's nearest seed per
+    * subspace (ties to the lower cid), and `lut`, the ADC table of the
+    * vector qv in CTE `query` — the exact arithmetic
+    * `ProductQuantizer.adcTopK` runs.
+    */
+  private def pqAdcCtes(base: String, query: String): String =
+    s"""${pqCodeCtes(base)},
+         codes AS (SELECT vec_id, sub, cid AS code FROM (
+             SELECT vec_id, sub, cid, row_number() OVER
+               (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn
+             FROM d) WHERE rn = 1),
+         lut AS (SELECT ce.sub, ce.cid,
+             (list_dot_product(
+                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
+                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)])
+               - 2.0 * list_dot_product(
+                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
+                 cs))
+               + list_dot_product(cs, cs) AS ad
+           FROM ce CROSS JOIN $query)"""
+
+  /** PQ over the whole table with vec_id 0 as the query: `b` the base,
+    * `q` the query vector, then [[pqAdcCtes]] — shared by q_pq_adc and
+    * q_pq_recall.
+    */
+  private val pqAdcChainSql: String =
+    s"""${embeddingCtes(norm = false)},
+         b AS (SELECT * FROM e WHERE vec_id <> 0),
+         q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+         ${pqAdcCtes("b", "q")}"""
+
+  /** The BM25 scores for the terms spark, vector and window as CTEs
+    * `d` … `bm` (doc_id, score_r) — the oracle side of
+    * `Retrieval.bm25` as q_rrf_fusion and q_hard_negatives call it.
+    */
+  private val bm25Ctes =
+    """d AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+           FROM documents),
+         c AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(len(toks)) AS BIGINT) AS tot_len FROM d),
+         t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM d),
+         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
+           FROM t WHERE tok IN ('spark', 'vector', 'window')
+           GROUP BY 1, 2, 3),
+         dfq AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
+           FROM tf GROUP BY 1),
+         sc AS (SELECT tf.doc_id,
+             ln(1.0 + (c.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
+               * CAST(tf.tf AS DOUBLE) * 2.2
+               / (tf.tf + 1.2 * (1.0 - 0.75 +
+                   0.75 * CAST(tf.dl AS DOUBLE)
+                     / (CAST(c.tot_len AS DOUBLE) / c.n_docs)))
+               AS term_score
+           FROM tf JOIN dfq USING (tok) CROSS JOIN c),
+         bm AS (SELECT doc_id, round(sum(term_score), 6) AS score_r
+           FROM sc GROUP BY 1)"""
+
+  /** The 2000-vector slice with `qv` (qvec, qn), vector 0 as the
+    * query — the oracle side of the `vec_id === 0` query row that
+    * q_rrf_fusion, q_mmr and q_hard_negatives score against.
+    */
+  private val query0Ctes =
+    s"""${embeddingCtes("vec_id < 2000")},
+         qv AS (SELECT v AS qvec, nrm AS qn FROM n WHERE vec_id = 0)"""
+
+  /** The rounded cosine of an `n` row to [[query0Ctes]]' query. */
+  private val query0Cos = cosSql("qv.qvec", "n.v", "qv.qn", "n.nrm")
+
+  /** The candidates (vec_id >= 10) of the bucketed 2000 slice scored
+    * against the 10 queries: `s` (q_id, cand_id, qb, cb, cos_r) — the
+    * oracle side of [[lshScored]].
+    */
+  private val lshScoredCtes =
+    s"""${embeddingCtes("vec_id < 2000", nCols = Seq(lshBucket))},
+         s AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
+             q.bucket AS qb, c.bucket AS cb,
+             ${cosSql("q", "c")} AS cos_r
+           FROM n q JOIN n c ON c.vec_id >= 10 WHERE q.vec_id < 10)"""
+
+  /** [[lshScoredCtes]]' `s` rows matching `where` with their
+    * per-query rank rk, as a derived table.
+    */
+  private def rankedSql(where: String = ""): String =
+    s"(SELECT q_id, cand_id, $qRank AS rk FROM s$where)"
+
+  // One definition for the top-3-per-query result: q_ann_topk derives
+  // it via the window-rank idiom, q_topk_agg via the heap aggregate —
+  // both must produce exactly this, so they share the oracle text.
+  private val topk3Oracle =
+    s"""WITH ${embeddingCtes("vec_id < 2000")},
+         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
+             ${cosSql("q", "c")} AS cos_r
+           FROM n q JOIN n c ON c.vec_id >= 10
+           WHERE q.vec_id < 10),
+         r AS (SELECT *, CAST($qRank AS BIGINT) AS rank
+           FROM p)
+         SELECT q_id, cand_id, rank, cos_r FROM r WHERE rank <= 3
+         ORDER BY q_id, rank"""
+
+  // One definition of the fixed-centroid IVF search result: q_ann_ivf
+  // computes it in memory, q_ann_ivf_persisted through the save →
+  // cold-load disk round trip — both must match exactly this.
+  private val ivfOracle =
+    s"""WITH ${ivfCtes("vec_id < 2000")},
+         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.cell,
+             ${cosSql("q", "c")} AS cos_r
+             FROM assigned q JOIN assigned c
+               ON q.cell = c.cell AND q.vec_id <> c.vec_id
+             WHERE q.vec_id < 66),
+         ${nearestSql("cell")}"""
+
+  /** Unrolled Lloyd oracle for q_kmeans_exact: each iteration's
+    * distance/argmin/update mirrors the Spark side's decimal-exact
+    * aggregates (terms and coordinate sums through DECIMAL(28,14)).
+    */
+  private val kmeansOracle: String =
+    s"""WITH ${embeddingCtes("vec_id < 500", norm = false)},
          x AS (SELECT vec_id, unnest(v) AS x,
              generate_subscripts(v, 1) AS pos FROM e),
          c0 AS (SELECT vec_id AS cid, pos, x AS cx FROM x
            WHERE vec_id < 4),
-         ${iter(1)},
-         ${iter(2)},
+         ${lloydCtes(1)},
+         ${lloydCtes(2)},
          cnt AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members
            FROM a2 GROUP BY 1),
          cs AS (SELECT cid, CAST(sum(CAST(round(cx, 6)
@@ -1200,137 +1366,40 @@ object VectorQueries {
            FROM c2 GROUP BY 1)
          SELECT cnt.cid, cnt.n_members, cs.cent_sum_r
          FROM cnt JOIN cs ON cs.cid = cnt.cid ORDER BY cnt.cid"""
-  }
 
   /** IVF+PQ oracle: the ivfOracle assignment chain composed with the
-    * pqAdcChainSql arithmetic, parameterized on the query's cell
+    * pqAdcCtes arithmetic, parameterized on the query's cell
     * (query = vec_id 20, database = its cell minus itself, codebook
     * seeded from the CELL members by the same pq: hash order).
     */
   private val ivfpqOracle =
-    """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-             WHERE vec_id < 16),
-         scored AS (SELECT x.vec_id, x.v, x.nrm, c.c_id,
-             round(list_dot_product(x.v, c.cv) / (x.nrm * c.cn), 6) + 0.0 AS c_cos
-             FROM n x CROSS JOIN cent c WHERE x.vec_id >= 16),
-         assigned AS (SELECT vec_id, v, nrm, c_id AS cell FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rk
-             FROM scored) WHERE rk = 1),
+    s"""WITH ${ivfCtes("vec_id < 2000")},
          qc AS (SELECT cell AS qcell FROM assigned WHERE vec_id = 20),
          qq AS (SELECT v AS qv FROM assigned WHERE vec_id = 20),
          b AS (SELECT a.vec_id, a.v FROM assigned a
            JOIN qc ON a.cell = qc.qcell WHERE a.vec_id <> 20),
-         seeds AS (SELECT vec_id AS cid, v AS cv FROM b
-           ORDER BY md5('pq:' || CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT 16),
-         sb AS (SELECT unnest(range(0, 8)) AS sub),
-         ve AS (SELECT vec_id, sub,
-             v[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS vs
-           FROM b CROSS JOIN sb),
-         ce AS (SELECT cid, sub,
-             cv[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS cs
-           FROM seeds CROSS JOIN sb),
-         d AS (SELECT ve.vec_id, ve.sub, ce.cid,
-             (list_dot_product(vs, vs) - 2.0 * list_dot_product(vs, cs))
-               + list_dot_product(cs, cs) AS dist
-           FROM ve JOIN ce ON ve.sub = ce.sub),
-         codes AS (SELECT vec_id, sub, cid AS code FROM (
-             SELECT vec_id, sub, cid, row_number() OVER
-               (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn
-             FROM d) WHERE rn = 1),
-         lut AS (SELECT ce.sub, ce.cid,
-             (list_dot_product(
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)])
-               - 2.0 * list_dot_product(
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
-                 cs))
-               + list_dot_product(cs, cs) AS ad
-           FROM ce CROSS JOIN qq)
+         ${pqAdcCtes("b", "qq")}
          SELECT c.vec_id, round(sum(l.ad), 6) + 0.0 AS adist_r
          FROM codes c JOIN lut l ON l.sub = c.sub AND l.cid = c.code
          GROUP BY 1 ORDER BY adist_r, c.vec_id LIMIT 10"""
 
-  /** Shared CTE chain for the PQ oracles (q_pq_adc / q_pq_recall):
-    * base/query split at vec_id 0, hash-seeded codebook, per-subspace
-    * slices, code assignment, and the query's ADC lookup table — the
-    * exact arithmetic ProductQuantizer runs.
+  /** Shared by q_semantic_dedup and its capped twin — the cap is
+    * provably drop-free, so both run against the exact fold.
     */
-  private val pqAdcChainSql: String =
-    """e AS (SELECT vec_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-         b AS (SELECT * FROM e WHERE vec_id <> 0),
-         q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-         seeds AS (SELECT vec_id AS cid, v AS cv FROM b
-           ORDER BY md5('pq:' || CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT 16),
-         sb AS (SELECT unnest(range(0, 8)) AS sub),
-         ve AS (SELECT vec_id, sub,
-             v[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS vs
-           FROM b CROSS JOIN sb),
-         ce AS (SELECT cid, sub,
-             cv[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS cs
-           FROM seeds CROSS JOIN sb),
-         d AS (SELECT ve.vec_id, ve.sub, ce.cid,
-             (list_dot_product(vs, vs) - 2.0 * list_dot_product(vs, cs))
-               + list_dot_product(cs, cs) AS dist
-           FROM ve JOIN ce ON ve.sub = ce.sub),
-         codes AS (SELECT vec_id, sub, cid AS code FROM (
-             SELECT vec_id, sub, cid, row_number() OVER
-               (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn
-             FROM d) WHERE rn = 1),
-         lut AS (SELECT ce.sub, ce.cid,
-             (list_dot_product(
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)])
-               - 2.0 * list_dot_product(
-                 qv[CAST(ce.sub * 8 + 1 AS INTEGER):CAST(ce.sub * 8 + 8 AS INTEGER)],
-                 cs))
-               + list_dot_product(cs, cs) AS ad
-           FROM ce CROSS JOIN q)"""
+  private val semanticDedupOracle: String =
+    s"""WITH ${ivfCtes("", k = 8)},
+         dropped AS (SELECT DISTINCT b.vec_id AS id
+           FROM assigned a JOIN assigned b
+             ON a.cell = b.cell AND a.vec_id < b.vec_id
+           WHERE ${cosSql("a", "b")} >= 0.3)
+         SELECT c.vec_id, c.cell FROM assigned c
+         WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.id = c.vec_id)
+         ORDER BY c.vec_id"""
 
   /** Unrolled greedy MMR trajectory: the same top-20 pool, pairwise
     * sim matrix, and argmax rounds as the q_mmr Spark loop, each
     * round's cumulative selected set materialized as a named CTE.
     */
-  /** Shared by q_semantic_dedup and its capped twin — the cap is
-    * provably drop-free, so both run against the exact fold.
-    */
-  private val semanticDedupOracle: String =
-    """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn
-           FROM n WHERE vec_id < 8),
-         asg AS (SELECT vec_id, v, nrm, c_id, row_number() OVER
-             (PARTITION BY vec_id ORDER BY
-               round(list_dot_product(v, cv) / (nrm * cn), 6) + 0.0 DESC, c_id)
-               AS rk
-           FROM n CROSS JOIN cent WHERE vec_id >= 8),
-         cell AS (SELECT vec_id, v, nrm, c_id AS cell FROM asg WHERE rk = 1),
-         dropped AS (SELECT DISTINCT b.vec_id AS id
-           FROM cell a JOIN cell b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0
-             >= 0.3)
-         SELECT c.vec_id, c.cell FROM cell c
-         WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.id = c.vec_id)
-         ORDER BY c.vec_id"""
-
   private def mmrOracle(k: Int): String = {
     val rounds = (2 to k).map { r =>
       s"""r$r AS (SELECT c.vec_id, c.rel,
@@ -1346,21 +1415,15 @@ object VectorQueries {
     }.mkString(",\n         ")
     val parts = (1 to k).map(r => s"SELECT * FROM s$r")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         qv AS (SELECT v AS qvec, nrm AS qn FROM n WHERE vec_id = 0),
+    s"""WITH $query0Ctes,
          cand AS (SELECT vec_id, v, nrm, rel FROM (
              SELECT n.vec_id, n.v, n.nrm,
-               round(list_dot_product(qv.qvec, n.v) / (qv.qn * n.nrm), 6) + 0.0
+               $query0Cos
                  AS rel
              FROM n CROSS JOIN qv WHERE n.vec_id >= 10)
            ORDER BY rel DESC, vec_id LIMIT 20),
          sims AS (SELECT a.vec_id AS a, b.vec_id AS b,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS sim
+             ${cosSql("a", "b")} AS sim
            FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
          s1 AS (SELECT vec_id, CAST(1 AS BIGINT) AS pick, rel AS score_r
            FROM cand ORDER BY rel DESC, vec_id LIMIT 1),
@@ -1424,20 +1487,15 @@ object VectorQueries {
     "q_pca_power" -> pcaOracle(3),
     "q_mmr" -> mmrOracle(4),
     "q_rand_proj" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 120),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
+      s"""WITH ${embeddingCtes("vec_id < 120")},
          pj AS (SELECT vec_id, v, nrm, $jlProjSql AS p FROM n),
          pp AS (SELECT * FROM (SELECT *,
              sqrt(list_sum(list_transform(p, x -> x * x))) AS pnrm
              FROM pj) WHERE pnrm > 0),
          pr AS (SELECT a.vec_id AS a, b.vec_id AS b,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0
+             ${cosSql("a", "b")}
                AS cos_r,
-             round(list_dot_product(a.p, b.p) / (a.pnrm * b.pnrm), 6) + 0.0
+             ${cosSql("a.p", "b.p", "a.pnrm", "b.pnrm")}
                AS pcos_r
            FROM pp a JOIN pp b ON a.vec_id < b.vec_id)
          SELECT a, b, cos_r, pcos_r, round(pcos_r - cos_r, 6) AS err_r
@@ -1445,38 +1503,13 @@ object VectorQueries {
     // same BM25 CTE chain as q_rrf_fusion; is_hard evaluates FALSE
     // (not NULL) for missing embeddings on both engines
     "q_hard_negatives" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
-           FROM documents),
-         c AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(toks)) AS BIGINT) AS tot_len FROM d),
-         t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM d),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
-           FROM t WHERE tok IN ('spark', 'vector', 'window')
-           GROUP BY 1, 2, 3),
-         dfq AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
-           FROM tf GROUP BY 1),
-         sc AS (SELECT tf.doc_id,
-             ln(1.0 + (c.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
-               * CAST(tf.tf AS DOUBLE) * 2.2
-               / (tf.tf + 1.2 * (1.0 - 0.75 +
-                   0.75 * CAST(tf.dl AS DOUBLE)
-                     / (CAST(c.tot_len AS DOUBLE) / c.n_docs)))
-               AS term_score
-           FROM tf JOIN dfq USING (tok) CROSS JOIN c),
-         bm AS (SELECT doc_id, round(sum(term_score), 6) AS score_r
-           FROM sc GROUP BY 1),
+      s"""WITH $bm25Ctes,
          lex AS (SELECT doc_id, score_r, CAST(row_number() OVER
              (ORDER BY score_r DESC, doc_id) AS BIGINT) AS lex_rank
            FROM (SELECT * FROM bm ORDER BY score_r DESC, doc_id LIMIT 20)),
-         e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         qv AS (SELECT v AS qvec, nrm AS qn FROM n WHERE vec_id = 0),
+         $query0Ctes,
          cs AS (SELECT n.vec_id,
-             round(list_dot_product(qv.qvec, n.v) / (qv.qn * n.nrm), 6) + 0.0
+             $query0Cos
                AS cosv
            FROM n CROSS JOIN qv)
          SELECT l.doc_id, l.lex_rank, l.score_r,
@@ -1542,34 +1575,15 @@ object VectorQueries {
          WHERE e.vec_id < 50
          ORDER BY vec_id, e.pos""",
     "q_cosine_pairs" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0)
+      s"""WITH ${embeddingCtes("vec_id < 300")}
          SELECT a.vec_id AS a, b.vec_id AS b,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cos_r
+             ${cosSql("a", "b")} AS cos_r
          FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 >= 0.2
+         WHERE ${cosSql("a", "b")} >= 0.2
          ORDER BY a, b""",
     "q_ann_topk" -> topk3Oracle,
     "q_ivf_stats" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-             WHERE vec_id < 16),
-         scored AS (SELECT x.vec_id, c.c_id,
-             round(list_dot_product(x.v, c.cv) / (x.nrm * c.cn), 6) + 0.0 AS c_cos
-             FROM n x CROSS JOIN cent c WHERE x.vec_id >= 16),
-         assigned AS (SELECT vec_id, c_id AS cell FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rk
-             FROM scored) WHERE rk = 1),
+      s"""WITH ${ivfCtes("vec_id < 2000")},
          t AS (SELECT count(*) AS n_total FROM assigned)
          SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
            round(CAST(count(*) AS DOUBLE) / CAST(t.n_total AS DOUBLE), 6)
@@ -1580,9 +1594,7 @@ object VectorQueries {
     "q_ann_ivfpq" -> ivfpqOracle,
     "q_kmeans_exact" -> kmeansOracle,
     "q_ann_int8" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH ${embeddingCtes(norm = false)},
          s AS (SELECT vec_id, v,
              list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
            FROM e),
@@ -1614,32 +1626,12 @@ object VectorQueries {
     "q_ann_ivf_persisted" -> ivfOracle,
     "q_ann_ivf_incremental" -> ivfOracle,
     "q_cosine_pairs_lsh" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0)
-         SELECT a.vec_id AS a, b.vec_id AS b, a.bucket,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cos_r
-         FROM n a JOIN n b
-           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 >= 0.2
+      s"""WITH ${embeddingCtes("vec_id < 300", nCols = Seq(lshBucket))}
+         ${lshPairSql(Seq("a.bucket", pairCos))}
          ORDER BY a, b""",
     "q_crosslingual_dups" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
-         p AS (SELECT a.vec_id AS a, b.vec_id AS b,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0
-               AS cos_r
-           FROM n a JOIN n b
-             ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0
-             >= 0.2)
+      s"""WITH ${embeddingCtes("vec_id < 300", nCols = Seq(lshBucket))},
+         p AS (${lshPairSql(Seq(pairCos))})
          SELECT p.a, p.b, da.lang AS lang_a, db.lang AS lang_b, p.cos_r
          FROM p
          JOIN documents da ON da.doc_id = p.a
@@ -1648,16 +1640,9 @@ object VectorQueries {
          ORDER BY p.a, p.b""",
     "q_topk_agg" -> topk3Oracle,
     "q_embed_cluster" ->
-      s"""WITH RECURSIVE e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
-         pairs AS (SELECT a.vec_id AS a, b.vec_id AS b
-           FROM n a JOIN n b
-             ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 >= 0.2),
+      s"""WITH RECURSIVE ${embeddingCtes("vec_id < 300",
+          nCols = Seq(lshBucket))},
+         pairs AS (${lshPairSql()}),
          edges AS (SELECT a, b FROM pairs
              UNION ALL SELECT b, a FROM pairs),
          reach(id, lbl) AS (
@@ -1666,37 +1651,17 @@ object VectorQueries {
              SELECT e2.a, r.lbl FROM edges e2 JOIN reach r ON e2.b = r.id)
          SELECT id AS vec_id, min(lbl) AS cluster_id
          FROM reach GROUP BY id ORDER BY vec_id""",
-    "q_ann_lsh" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
-         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.bucket,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-           FROM n q JOIN n c
-             ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           WHERE q.vec_id < 50),
-         r AS (SELECT *, row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS rk FROM p)
-         SELECT q_id, cand_id, bucket, cos_r FROM r WHERE rk = 1
-         ORDER BY q_id""",
+    "q_ann_lsh" -> bucketNearestOracle(lshBucket),
     "q_ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, label, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
+      s"""WITH ${embeddingCtes("vec_id < 2000", cols = Seq("label"),
+          nCols = Seq(lshBucket))},
          p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, c.label,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0
+             ${cosSql("q", "c")}
                AS cos_r
            FROM n q JOIN n c
              ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
            WHERE q.vec_id < 50 AND c.label % 2 = 0),
-         r AS (SELECT *, CAST(row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS BIGINT)
+         r AS (SELECT *, CAST($qRank AS BIGINT)
              AS rank FROM p)
          SELECT q_id, rank, cand_id, label, cos_r FROM r WHERE rank <= 3
          ORDER BY q_id, rank""",
@@ -1708,23 +1673,8 @@ object VectorQueries {
     // order as the Spark kernel, assigns cells (raw cosine, lowest-cid
     // ties), probes top-2 cells per query, and ranks top-3 candidates
     // by (score DESC, cand_id) — the TopKByScore total order.
-    "q_ann_ivf_kmeans" -> {
-      def iter(i: Int) =
-        s"""d$i AS (SELECT x.vec_id, c.cid,
-               sum(CAST((x.x - c.cx) * (x.x - c.cx) AS DECIMAL(28,14)))
-                 AS d
-             FROM x JOIN c${i - 1} c ON c.pos = x.pos GROUP BY 1, 2),
-           a$i AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
-                 AS rn
-             FROM d$i) WHERE rn = 1),
-           c$i AS (SELECT a.cid, x.pos,
-               CAST(sum(CAST(x.x AS DECIMAL(28,14))) AS DOUBLE) /
-                 count(*) AS cx
-             FROM x JOIN a$i a ON a.vec_id = x.vec_id GROUP BY 1, 2)"""
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
+    "q_ann_ivf_kmeans" ->
+      s"""WITH ${embeddingCtes("vec_id < 2000", norm = false)},
          x AS (SELECT vec_id, unnest(v) AS x,
              generate_subscripts(v, 1) AS pos FROM e),
          seeds AS (SELECT vec_id,
@@ -1733,8 +1683,8 @@ object VectorQueries {
            FROM (SELECT vec_id FROM e ORDER BY vec_id LIMIT 8)),
          c0 AS (SELECT s.cid, x.pos, x.x AS cx
            FROM x JOIN seeds s ON s.vec_id = x.vec_id),
-         ${iter(1)},
-         ${iter(2)},
+         ${lloydCtes(1)},
+         ${lloydCtes(2)},
          cl AS (SELECT cid, list(cx ORDER BY pos) AS cv FROM c2
            GROUP BY cid),
          cn AS (SELECT cid, cv,
@@ -1770,65 +1720,29 @@ object VectorQueries {
          SELECT q_id, cand_id, CAST(rk AS BIGINT) AS rank,
            round(score, 6) AS score_r
          FROM r WHERE rk <= 3
-         ORDER BY q_id, rank"""
-    },
-    "q_ann_bucketed" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $bucketSql AS bucket FROM e) WHERE nrm > 0),
-         p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.bucket,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-           FROM n q JOIN n c
-             ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           WHERE q.vec_id < 50),
-         r AS (SELECT *, row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS rk FROM p)
-         SELECT q_id, cand_id, bucket, cos_r FROM r WHERE rk = 1
-         ORDER BY q_id""",
+         ORDER BY q_id, rank""",
+    "q_ann_bucketed" -> bucketNearestOracle(s"$bucketSql AS bucket"),
     // the capped twin runs the identical fold under a provably
     // drop-free cell cap — same exact oracle
     "q_semantic_dedup_capped" -> semanticDedupOracle,
     "q_semantic_dedup" -> semanticDedupOracle,
     "q_ann_multiprobe" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
+      s"""WITH ${embeddingCtes("vec_id < 2000", nCols = Seq(lshBucket))},
          m AS (SELECT unnest([0, 1, 2, 4, 8, 16, 32, 64, 128]) AS mask),
          qp AS (SELECT vec_id, v, nrm, bucket,
              xor(bucket, mask) AS pbucket
            FROM n CROSS JOIN m WHERE vec_id < 50),
          p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id, q.bucket,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
+             ${cosSql("q", "c")} AS cos_r
            FROM qp q JOIN n c
              ON q.pbucket = c.bucket AND q.vec_id <> c.vec_id),
-         r AS (SELECT *, row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS rk FROM p)
-         SELECT q_id, cand_id, bucket, cos_r FROM r WHERE rk = 1
-         ORDER BY q_id""",
+         ${nearestSql("bucket")}""",
     "q_ann_ndcg" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
-         s AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
-             q.bucket AS qb, c.bucket AS cb,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-           FROM n q JOIN n c ON c.vec_id >= 10 WHERE q.vec_id < 10),
+      s"""WITH $lshScoredCtes,
          ex AS (SELECT q_id, cand_id, 6 - rk AS rel FROM
-             (SELECT q_id, cand_id, row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s) WHERE rk <= 5),
+             ${rankedSql()} WHERE rk <= 5),
          l4 AS (SELECT q_id, cand_id, rk AS pos FROM
-             (SELECT q_id, cand_id, row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s
-             WHERE qb % 16 = cb % 16) WHERE rk <= 5),
+             ${rankedSql(" WHERE qb % 16 = cb % 16")} WHERE rk <= 5),
          d AS (SELECT l.q_id,
              sum(CAST(COALESCE(x.rel, 0) AS DOUBLE) /
                ln(CAST(l.pos AS DOUBLE) + 1.0)) AS dcg
@@ -1841,32 +1755,14 @@ object VectorQueries {
          SELECT i.q_id, round(COALESCE(d.dcg, 0.0) / i.idcg, 6) AS ndcg_r
          FROM i LEFT JOIN d ON i.q_id = d.q_id ORDER BY i.q_id""",
     "q_ann_recall" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM e) WHERE nrm > 0),
-         s AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
-             q.bucket AS qb, c.bucket AS cb,
-             round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) + 0.0 AS cos_r
-           FROM n q JOIN n c ON c.vec_id >= 10 WHERE q.vec_id < 10),
-         ex AS (SELECT q_id, cand_id FROM (SELECT q_id, cand_id,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s) WHERE rk <= 3),
-         l8 AS (SELECT q_id, cand_id FROM (SELECT q_id, cand_id,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s WHERE qb = cb)
+      s"""WITH $lshScoredCtes,
+         ex AS (SELECT q_id, cand_id FROM ${rankedSql()} WHERE rk <= 3),
+         l8 AS (SELECT q_id, cand_id FROM ${rankedSql(" WHERE qb = cb")}
              WHERE rk <= 3),
-         l4 AS (SELECT q_id, cand_id FROM (SELECT q_id, cand_id,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s
-             WHERE qb % 16 = cb % 16)
-             WHERE rk <= 3),
-         lm AS (SELECT q_id, cand_id FROM (SELECT q_id, cand_id,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY cos_r DESC, cand_id) AS rk FROM s
-             WHERE bit_count(xor(qb, cb)) <= 1)
+         l4 AS (SELECT q_id, cand_id FROM
+             ${rankedSql(" WHERE qb % 16 = cb % 16")} WHERE rk <= 3),
+         lm AS (SELECT q_id, cand_id FROM
+             ${rankedSql(" WHERE bit_count(xor(qb, cb)) <= 1")}
              WHERE rk <= 3)
          SELECT x.q_id, CAST(count(*) AS BIGINT) AS n_exact,
            CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -1891,17 +1787,9 @@ object VectorQueries {
     // over the union edge set
     "q_hybrid_cluster" ->
       s"""WITH RECURSIVE ${TextQueries.minhashCtes()},
-         ev AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 300),
-         en AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             $lshBucketSql AS bucket FROM ev) WHERE nrm > 0),
-         epairs AS (SELECT a.vec_id AS a, b.vec_id AS b
-           FROM en a JOIN en b
-             ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0
-             >= 0.2),
+         ${embeddingCtes("vec_id < 300", nCols = Seq(lshBucket),
+           e = "ev", n = "en")},
+         epairs AS (${lshPairSql(n = "en")}),
          allp AS (SELECT a, b FROM pairs UNION SELECT a, b FROM epairs),
          ids AS (SELECT doc_id FROM documents WHERE doc_id < 2000),
          edges AS (SELECT a, b FROM allp UNION ALL SELECT b, a FROM allp),
@@ -1912,25 +1800,8 @@ object VectorQueries {
          SELECT id AS doc_id, min(lbl) AS cluster_id
          FROM reach GROUP BY id ORDER BY doc_id""",
     "q_pq_codes" ->
-      """WITH e AS (SELECT vec_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-         seeds AS (SELECT vec_id AS cid, v AS cv FROM e
-           ORDER BY md5('pq:' || CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT 16),
-         sb AS (SELECT unnest(range(0, 8)) AS sub),
-         ve AS (SELECT vec_id, sub,
-             v[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS vs
-           FROM e CROSS JOIN sb),
-         ce AS (SELECT cid, sub,
-             cv[CAST(sub * 8 + 1 AS INTEGER):CAST(sub * 8 + 8 AS INTEGER)]
-               AS cs
-           FROM seeds CROSS JOIN sb),
-         d AS (SELECT ve.vec_id, ve.sub, ce.cid,
-             (list_dot_product(vs, vs) - 2.0 * list_dot_product(vs, cs))
-               + list_dot_product(cs, cs) AS dist
-           FROM ve JOIN ce ON ve.sub = ce.sub),
+      s"""WITH ${embeddingCtes(norm = false)},
+         ${pqCodeCtes("e")},
          r AS (SELECT vec_id, sub, cid, dist, row_number() OVER
              (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn
            FROM d)
@@ -1960,9 +1831,7 @@ object VectorQueries {
                AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS recall_r
          FROM ext LEFT JOIN adc a ON ext.vec_id = a.vec_id""",
     "q_quantize_embed" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH ${embeddingCtes(norm = false)},
          s AS (SELECT vec_id, v,
              list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
            FROM e),
@@ -1979,26 +1848,21 @@ object VectorQueries {
            CAST(len(list_filter(qs, c -> abs(c) = 127)) AS INTEGER) AS n_sat
          FROM q ORDER BY vec_id""",
     "q_ann_rerank" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm,
-             list_slice(v, 1, 16) AS p FROM e) WHERE nrm > 0),
+      s"""WITH ${embeddingCtes("vec_id < 2000",
+          nCols = Seq("list_slice(v, 1, 16) AS p"))},
          n2 AS (SELECT * FROM (SELECT vec_id, v, nrm, p,
              sqrt(list_sum(list_transform(p, x -> x * x))) AS pn FROM n)
              WHERE pn > 0),
          s1 AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
              q.v AS qv, c.v AS cv, q.nrm AS qn, c.nrm AS cn,
-             round(list_dot_product(q.p, c.p) / (q.pn * c.pn), 6) + 0.0 AS pcos
+             ${cosSql("q.p", "c.p", "q.pn", "c.pn")} AS pcos
            FROM n2 q JOIN n2 c ON c.vec_id >= 10 WHERE q.vec_id < 10),
          r1 AS (SELECT *, row_number() OVER
              (PARTITION BY q_id ORDER BY pcos DESC, cand_id) AS rk1 FROM s1),
          s2 AS (SELECT q_id, cand_id,
-             round(list_dot_product(qv, cv) / (qn * cn), 6) + 0.0 AS cos_r
+             ${cosSql("qv", "cv", "qn", "cn")} AS cos_r
            FROM r1 WHERE rk1 <= 10),
-         r2 AS (SELECT *, CAST(row_number() OVER
-             (PARTITION BY q_id ORDER BY cos_r DESC, cand_id) AS BIGINT)
+         r2 AS (SELECT *, CAST($qRank AS BIGINT)
              AS rank FROM s2)
          SELECT q_id, cand_id, rank, cos_r FROM r2 WHERE rank <= 3
          ORDER BY q_id, rank""",
@@ -2006,38 +1870,13 @@ object VectorQueries {
     // LIMIT, so the top-20 sets and rank values are engine-identical;
     // the BM25 CTE chain mirrors TextQueries' q_bm25 oracle verbatim
     "q_rrf_fusion" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
-           FROM documents),
-         c AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(toks)) AS BIGINT) AS tot_len FROM d),
-         t AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM d),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
-           FROM t WHERE tok IN ('spark', 'vector', 'window')
-           GROUP BY 1, 2, 3),
-         dfq AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
-           FROM tf GROUP BY 1),
-         sc AS (SELECT tf.doc_id,
-             ln(1.0 + (c.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
-               * CAST(tf.tf AS DOUBLE) * 2.2
-               / (tf.tf + 1.2 * (1.0 - 0.75 +
-                   0.75 * CAST(tf.dl AS DOUBLE)
-                     / (CAST(c.tot_len AS DOUBLE) / c.n_docs)))
-               AS term_score
-           FROM tf JOIN dfq USING (tok) CROSS JOIN c),
-         bm AS (SELECT doc_id, round(sum(term_score), 6) AS score_r
-           FROM sc GROUP BY 1),
+      s"""WITH $bm25Ctes,
          lex AS (SELECT doc_id, CAST(row_number() OVER
              (ORDER BY score_r DESC, doc_id) AS BIGINT) AS lex_rank
            FROM (SELECT * FROM bm ORDER BY score_r DESC, doc_id LIMIT 20)),
-         e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id < 2000),
-         n AS (SELECT * FROM (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-             WHERE nrm > 0),
-         qv AS (SELECT v AS qvec, nrm AS qn FROM n WHERE vec_id = 0),
+         $query0Ctes,
          scd AS (SELECT n.vec_id,
-             round(list_dot_product(qv.qvec, n.v) / (qv.qn * n.nrm), 6) + 0.0
+             $query0Cos
                AS cos_r
            FROM n CROSS JOIN qv WHERE n.vec_id >= 10),
          sem AS (SELECT vec_id AS doc_id, CAST(row_number() OVER

@@ -83,6 +83,19 @@ class TablesSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("every static oracle declares each of its CTE names once") {
+    // generators compose CTE blocks and can emit a name twice; DuckDB
+    // then refuses the whole oracle (`Duplicate CTE name`), which
+    // only a full Verify + check_oracle.py run would otherwise show
+    val static =
+      SparkEntry.oracleSql -- graft.queries.DynamicOracles.declared
+    val dups = static.toSeq.sortBy(_._1).flatMap { case (q, sql) =>
+      val names = TablesSpec.cteNames(sql)
+      names.diff(names.distinct).distinct.map(n => s"$q: $n")
+    }
+    assert(dups.isEmpty, s"duplicate CTE names: ${dups.mkString(", ")}")
+  }
+
   test("Verify.runOne writes parquet for a succeeding query") {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_verify_ok")
@@ -115,5 +128,49 @@ class TablesSpec extends AnyFunSuite {
       assert(!names(dir.getParent).exists(_.startsWith(s"${dir.getFileName}_")))
     } finally Seq("_rank", "_pref", "_sh", "_meta").foreach(sfx =>
       spark.sql(s"DROP TABLE IF EXISTS $tp$sfx"))
+  }
+}
+
+object TablesSpec {
+
+  /** The names the leading `WITH [RECURSIVE]` of `sql` declares at
+    * paren depth 0 — each `<ident> [(<columns>)] AS [MATERIALIZED] (`,
+    * lower-cased — skipping single-quoted literals; empty when `sql`
+    * does not open with WITH. Fails on a list it cannot read to its
+    * end, so a shape it does not know cannot hide a name.
+    */
+  def cteNames(sql: String): Seq[String] = {
+    // depth-0 text, each top-level (…) group collapsed to "()"
+    val top = new StringBuilder
+    var depth = 0
+    var quoted = false
+    sql.foreach { ch =>
+      if (quoted) { if (ch == '\'') quoted = false }
+      else ch match {
+        case '\'' => quoted = true
+        case '(' => if (depth == 0) top += '('; depth += 1
+        case ')' => depth -= 1; if (depth == 0) top += ')'
+        case c => if (depth == 0) top += c
+      }
+    }
+    val head = """(?is)\s*WITH\s+(?:RECURSIVE\s+)?""".r
+    val cte =
+      """(?is)\s*(\w+)\s*(?:\(\))?\s+AS\s+(?:MATERIALIZED\s+)?\(\)\s*(,?)""".r
+    head.findPrefixMatchOf(top) match {
+      case None => Nil
+      case Some(m) =>
+        val names = Seq.newBuilder[String]
+        var rest: CharSequence = m.after
+        var more = true
+        while (more) {
+          val c = cte.findPrefixMatchOf(rest).getOrElse(
+            throw new IllegalArgumentException(
+              s"unreadable CTE list at: ${rest.toString.take(80)}"))
+          names += c.group(1).toLowerCase
+          rest = c.after
+          more = c.group(2) == ","
+        }
+        names.result()
+    }
   }
 }

@@ -15,6 +15,14 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 
+def connect(sfdir):
+    """A DuckDB connection with a view per table of the sf directory."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    return con
+
+
 def canon(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = []
@@ -64,9 +72,7 @@ def main(outdir, sfdir):
               "nothing was verified")
         sys.exit(1)
     names = json.load(open(mpath))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    con = connect(sfdir)
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     results = {}
     for name in sorted(names):
